@@ -44,8 +44,7 @@ object Engine {
       // writer: at production shuffle.partitions (≫ the 200-partition
       // bypass threshold) the sort writer is what runs anyway, so the
       // default-200 bypass only ever engaged in small local runs.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1"))
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       // Local default only (a cluster sets its fast local disks via
       // spark-submit / spark-defaults): shuffle + spill files on the
       // sandbox's root disk pay a real file-create/write cost per block;
@@ -71,8 +70,10 @@ object Engine {
     spark
   }
 
+  /** `SPARK_GRAFT_CPUS` when set, else the host's processor count. */
   def defaultCores: Int =
-    sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** Parallelism FLOOR for CPU-bound per-row stages (codec decode,
     * signature/hash kernels, exact-decimal math, regex chains): when

@@ -724,6 +724,9 @@ object Registry {
       // (base + mod − 1), budget rows per batch — the unroll bound is a
       // pure function of the same constants the engine publishes with
       val maxBatches = ((p.toLong * (base + m - 1) + b - 1) / b).toInt
+      // DuckDB's sum(BIGINT) OVER () is HUGEINT, which widens total, fl,
+      // admitted and every later stage's avail; the final SELECT casts
+      // back to the engine's BIGINT so the column types match too.
       // one allocation stage: largest-remainder split of stage i's avail
       // vector (GREATEST guard only bites on the all-drained tail stages,
       // where total = 0 and every branch yields admitted = avail = 0)
@@ -756,8 +759,9 @@ object Registry {
                    FROM events GROUP BY 1) c USING (partition)
       ),
       $stages
-      SELECT batch_seq, partition, avail AS backlog, admitted,
-        avail - admitted AS deferred
+      SELECT batch_seq, partition, CAST(avail AS BIGINT) AS backlog,
+        CAST(admitted AS BIGINT) AS admitted,
+        CAST(avail - admitted AS BIGINT) AS deferred
       FROM ($union)
       WHERE total > 0
       ORDER BY batch_seq, partition"""
@@ -3617,7 +3621,7 @@ object Registry {
     * l0_pipeline/l6DedupDocs discipline generalized to the declared
     * queries whose frame CONSTRUCTION is analysis-dominated: Spark's
     * eager per-op Catalyst analysis costs 0.2–0.6 s per invocation on
-    * these trees (ConstructProbe, warm pass), paid again on every
+    * these trees (measured warm), paid again on every
     * re-declaration of an identical query. The memo caches the PLAN, not
     * results: every action on the returned frame still computes from the
     * parquet inputs (plus the session's established persist/checkpoint

@@ -494,10 +494,6 @@ object Dedup {
         array_join(col("kept"), " ").as("text_clean"))
   }
 
-  /** Dev probe hook: the spanStarts chain at declared defaults. */
-  private[graft] def spanStartsProbe(docs: DataFrame): DataFrame =
-    spanStarts(docs, DupSpanN, TextOps.spaceTokenizer)
-
   /** L1c declared query: ExactSubstr removal over the documents corpus. */
   def l1SubstrDedup(spark: SparkSession, dir: String): DataFrame =
     substrDedup(Tables(spark, dir).documents).orderBy(col("doc_id"))

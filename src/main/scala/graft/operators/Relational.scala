@@ -535,7 +535,7 @@ object Relational {
     * row_number pass inside the group exchange, pick the two rows, and
     * interpolate with EXACTLY Spark's arithmetic —
     * `(⌈pos⌉−pos)·lo + (pos−⌊pos⌋)·hi`, lo when pos is integral —
-    * reproduced bit-for-bit (PctProbe verified 18/18 group×p cases at
+    * reproduced bit-for-bit (a one-off probe matched 18/18 group×p cases at
     * three SFs against expr("percentile"); RelationalSpec pins it).
     *
     * Null discipline: values are filtered before ranking and counted
@@ -672,8 +672,8 @@ object Relational {
     // the other half of the same agg as a full per-group value buffer
     // (`percentile(col, array(0.5, 0.95))`) — now comes from
     // [[rankPercentiles]]'s codegen passes and broadcast-joins back
-    // (3-row frames). Same values bit-for-bit: PctProbe/RelationalSpec
-    // pin the rank interpolation against the object aggregate.
+    // (3-row frames). Same values bit-for-bit: RelationalSpec pins the
+    // rank interpolation against the object aggregate.
     val base = t.lineitem.select(col("l_returnflag"), col("l_extendedprice"))
     val ex = rankPercentiles(base, "l_returnflag", "l_extendedprice", Seq(0.5, 0.95))
     base

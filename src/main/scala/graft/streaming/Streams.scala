@@ -1,11 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.sources.{MqBroker, MqSource}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types.StructType
 
 /** T1–T8 + J8/J9 + S3/S4/S5 (SURVEY.md §2.8): Structured-Streaming
@@ -92,13 +92,7 @@ object Streams {
     val df = spark.readStream.format(MqSource.format)
       .option("topic", topic)
       .option("maxOffsetsPerTrigger", S2AdmissionBudget.toString).load()
-    val q = df.writeStream
-      .foreachBatch((_: DataFrame, _: Long) => ())
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-cp-s2adm").toString)
-      .start()
-    q.awaitTermination()
+    runToEnd(df.writeStream.foreachBatch((_: DataFrame, _: Long) => ()), None, "s2adm")
     MqAdmission.metricsFrame(spark, topic)
       .orderBy(col("batch_seq"), col("partition"))
   }
@@ -384,6 +378,28 @@ object Streams {
 
   // ---------- sinks + harness (S5, T7, T8) ----------
 
+  /** The one run policy of every sink here: drain the data available now
+    * under `Trigger.AvailableNow` and block until the query stops. A
+    * caller's `checkpoint` is kept, since a restart resumes from it;
+    * without one the run gets a `graft-cp-<name>` temp dir, deleted once
+    * the query has stopped.
+    */
+  private def runToEnd(writer: DataStreamWriter[Row], checkpoint: Option[String],
+                       name: String = "run"): Unit = {
+    val cp = checkpoint.getOrElse(Files.createTempDirectory(s"graft-cp-$name").toString)
+    try writer.trigger(Trigger.AvailableNow()).option("checkpointLocation", cp)
+      .start().awaitTermination()
+    finally if (checkpoint.isEmpty)
+      Files.walk(Paths.get(cp)).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+  }
+
+  /** [[runToEnd]] in the foreachBatch form: `f` gets each micro-batch
+    * with its batch id.
+    */
+  private def drain(df: DataFrame, checkpoint: String)(f: (DataFrame, Long) => Unit): Unit =
+    runToEnd(df.writeStream.foreachBatch(f), Some(checkpoint))
+
   /** T8: run a streaming frame to completion over the data available now
     * and return the result table. `Trigger.AvailableNow` + memory sink:
     * the batch-equivalence harness (streaming answer == batch answer on
@@ -396,14 +412,9 @@ object Streams {
     */
   def runAvailableNow(df: DataFrame, name: String, mode: OutputMode,
                       checkpoint: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    val cp = checkpoint.getOrElse(
-      Files.createTempDirectory(s"graft-cp-$name").toString)
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cp).start()
-    q.awaitTermination()
-    spark.table(name)
+    runToEnd(df.writeStream.format("memory").queryName(name).outputMode(mode),
+      checkpoint, name)
+    df.sparkSession.table(name)
   }
 
   /** S5b: MQ write-back — publish a streaming frame to a broker topic via
@@ -414,14 +425,9 @@ object Streams {
     * At-least-once (task retries may re-publish), same as a Kafka sink;
     * consumers needing exactly-once dedup by key within a watermark (T5).
     */
-  def writeToMq(df: DataFrame, topic: String, checkpoint: String): Unit = {
-    val q = df.writeStream.format(MqSource.format).option("topic", topic)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+  def writeToMq(df: DataFrame, topic: String, checkpoint: String): Unit =
+    runToEnd(df.writeStream.format(MqSource.format).option("topic", topic)
+      .outputMode(OutputMode.Append), Some(checkpoint))
 
   /** S4b: decode with VALIDITY instead of silent nulls — `from_json`
     * (PERMISSIVE) yields a null struct on unparseable payloads and nulls
@@ -448,25 +454,27 @@ object Streams {
     * this is the standard foreachBatch fan-out shape.
     */
   def runWithDeadLetter(mq: DataFrame, outTopic: String, dlqTopic: String,
-                        checkpoint: String): Unit = {
-    val q = decodeEventsValidated(mq).writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          batch.filter(col("valid"))
-            .select(col("e.user_id").cast("string").as("key"),
-              to_json(col("e")).as("value"), col("timestamp"))
-            .write.mode("append").format(MqSource.format).option("topic", outTopic).save()
-          batch.filter(!col("valid"))
-            .select(col("key"), col("raw").as("value"), col("timestamp"))
-            .write.mode("append").format(MqSource.format).option("topic", dlqTopic).save()
-        } finally { batch.unpersist(); () }
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+                        checkpoint: String): Unit =
+    drain(decodeEventsValidated(mq), checkpoint) { (batch, _) =>
+      batch.persist()
+      try {
+        routedRows(batch)
+          .write.mode("append").format(MqSource.format).option("topic", outTopic).save()
+        batch.filter(!col("valid"))
+          .select(col("key"), col("raw").as("value"), col("timestamp"))
+          .write.mode("append").format(MqSource.format).option("topic", dlqTopic).save()
+      } finally { batch.unpersist(); () }
+    }
+
+  /** The mainline wire format of a validated event, one definition for
+    * the route ([[runWithDeadLetter]]) and the replay
+    * ([[replayDeadLetter]]): the valid rows, keyed by user, the decoded
+    * event re-encoded as JSON, the source timestamp kept.
+    */
+  private def routedRows(validated: DataFrame): DataFrame =
+    validated.filter(col("valid"))
+      .select(col("e.user_id").cast("string").as("key"),
+        to_json(col("e")).as("value"), col("timestamp"))
 
   /** S9b: streaming quality gate — the S9 constraint audit applied
     * in-flight. Every DECODED row is annotated with the names of the
@@ -488,32 +496,27 @@ object Streams {
                          checkpoint: String): Unit = {
     val annotated = decodeEvents(mq)
       .withColumn("__violated", violationNames(rules))
-    val q = annotated.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          batch.filter(size(col("__violated")) === 0)
-            .select(col("user_id").cast("string").as("key"),
-              to_json(struct(col("event_id"), col("user_id"), col("event_type"),
-                col("value"), col("ts"))).as("value"), col("ts").as("timestamp"))
-            .write.mode("append").format(MqSource.format).option("topic", outTopic).save()
-          // carries ts too: the quarantine topic supports the same
-          // fix-rule-then-replay contract as the dead-letter topic, and a
-          // replay without the original event time would lose watermark /
-          // windowing fidelity downstream
-          batch.filter(size(col("__violated")) > 0)
-            .select(col("user_id").cast("string").as("key"),
-              to_json(struct(col("event_id"), col("__violated").as("violated"),
-                col("event_type"), col("value"), col("ts"))).as("value"),
-              col("ts").as("timestamp"))
-            .write.mode("append").format(MqSource.format)
-            .option("topic", quarantineTopic).save()
-        } finally { batch.unpersist(); () }
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
+    drain(annotated, checkpoint) { (batch, _) =>
+      batch.persist()
+      try {
+        batch.filter(size(col("__violated")) === 0)
+          .select(col("user_id").cast("string").as("key"),
+            to_json(struct(col("event_id"), col("user_id"), col("event_type"),
+              col("value"), col("ts"))).as("value"), col("ts").as("timestamp"))
+          .write.mode("append").format(MqSource.format).option("topic", outTopic).save()
+        // carries ts too: the quarantine topic supports the same
+        // fix-rule-then-replay contract as the dead-letter topic, and a
+        // replay without the original event time would lose watermark /
+        // windowing fidelity downstream
+        batch.filter(size(col("__violated")) > 0)
+          .select(col("user_id").cast("string").as("key"),
+            to_json(struct(col("event_id"), col("__violated").as("violated"),
+              col("event_type"), col("value"), col("ts"))).as("value"),
+            col("ts").as("timestamp"))
+          .write.mode("append").format(MqSource.format)
+          .option("topic", quarantineTopic).save()
+      } finally { batch.unpersist(); () }
+    }
   }
 
   /** S5d: DLQ REPLAY — the second half of the dead-letter contract.
@@ -541,9 +544,7 @@ object Streams {
         .select(col("key"), repair(col("value")).as("value"), col("timestamp")))
     validated.persist()
     try {
-      val good = validated.filter(col("valid"))
-        .select(col("e.user_id").cast("string").as("key"),
-          to_json(col("e")).as("value"), col("timestamp"))
+      val good = routedRows(validated)
       good.write.mode("append").format(MqSource.format).option("topic", outTopic).save()
       (good.count(), validated.filter(!col("valid")).count())
     } finally { validated.unpersist(); () }
@@ -553,16 +554,10 @@ object Streams {
     * a batch-id subdirectory; with the checkpoint this is the standard
     * exactly-once file-sink recipe.
     */
-  def foreachBatchParquet(df: DataFrame, outDir: String, checkpoint: String): Unit = {
-    val q = df.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_$id")
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+  def foreachBatchParquet(df: DataFrame, outDir: String, checkpoint: String): Unit =
+    drain(df, checkpoint) { (batch, id) =>
+      batch.write.mode("overwrite").parquet(s"$outDir/batch_$id")
+    }
 
   // ---------- streaming CDC apply (O6 × streaming) ----------
 
@@ -602,32 +597,25 @@ object Streams {
   def applyChangesStream(changes: DataFrame, snapshotDir: String, checkpoint: String,
                          keys: Seq[String], versionCols: Seq[String],
                          isDelete: Column,
-                         onBeforeCommit: Long => Unit = _ => ()): Unit = {
-    val q = changes.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val dir = new java.io.File(snapshotDir)
-        dir.mkdirs()
-        val tagged = batch.withColumn("__tombstone", isDelete)
-        val merged = latestVersion(snapshotDir) match {
-          case None => tagged
-          case Some(v) => spark.read.parquet(s"$snapshotDir/v$v").unionByName(tagged)
-        }
-        graft.operators.Relational.latestPerKey(merged, keys, versionCols.map(col))
-          .write.mode("overwrite").parquet(s"$snapshotDir/v$id")
-        // crash-injection seam for the torn-commit soak (StreamingSpec):
-        // a process death exactly here — version fully written, pointer
-        // not yet flipped — is the protocol's critical window
-        onBeforeCommit(id)
-        // pointer flip: write-then-rename, atomic on a POSIX fs
-        commitVersion(snapshotDir, id)
-        ()
+                         onBeforeCommit: Long => Unit = _ => ()): Unit =
+    drain(changes, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      val dir = new java.io.File(snapshotDir)
+      dir.mkdirs()
+      val tagged = batch.withColumn("__tombstone", isDelete)
+      val merged = latestVersion(snapshotDir) match {
+        case None => tagged
+        case Some(v) => spark.read.parquet(s"$snapshotDir/v$v").unionByName(tagged)
       }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+      graft.operators.Relational.latestPerKey(merged, keys, versionCols.map(col))
+        .write.mode("overwrite").parquet(s"$snapshotDir/v$id")
+      // crash-injection seam for the torn-commit soak (StreamingSpec):
+      // a process death exactly here — version fully written, pointer
+      // not yet flipped — is the protocol's critical window
+      onBeforeCommit(id)
+      // pointer flip: write-then-rename, atomic on a POSIX fs
+      commitVersion(snapshotDir, id)
+    }
 
   private def latestVersion(snapshotDir: String): Option[Long] = {
     val p = java.nio.file.Paths.get(snapshotDir, "LATEST")
@@ -668,31 +656,24 @@ object Streams {
     * final view == one batch aggregation of the entire topic.
     */
   def aggViewStream(events: DataFrame, snapshotDir: String, checkpoint: String,
-                    keys: Seq[String], aggs: Seq[MergeableAgg]): Unit = {
-    val q = events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        new java.io.File(snapshotDir).mkdirs()
-        val partial = batch.groupBy(keys.map(col): _*)
-          .agg(aggs.head.perBatch.as(aggs.head.name),
-            aggs.tail.map(a => a.perBatch.as(a.name)): _*)
-        val merged = latestVersion(snapshotDir) match {
-          case None => partial
-          case Some(v) =>
-            spark.read.parquet(s"$snapshotDir/v$v").unionByName(partial)
-              .groupBy(keys.map(col): _*)
-              .agg(aggs.head.merge(col(aggs.head.name)).as(aggs.head.name),
-                aggs.tail.map(a => a.merge(col(a.name)).as(a.name)): _*)
-        }
-        merged.write.mode("overwrite").parquet(s"$snapshotDir/v$id")
-        commitVersion(snapshotDir, id)
-        ()
+                    keys: Seq[String], aggs: Seq[MergeableAgg]): Unit =
+    drain(events, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      new java.io.File(snapshotDir).mkdirs()
+      val partial = batch.groupBy(keys.map(col): _*)
+        .agg(aggs.head.perBatch.as(aggs.head.name),
+          aggs.tail.map(a => a.perBatch.as(a.name)): _*)
+      val merged = latestVersion(snapshotDir) match {
+        case None => partial
+        case Some(v) =>
+          spark.read.parquet(s"$snapshotDir/v$v").unionByName(partial)
+            .groupBy(keys.map(col): _*)
+            .agg(aggs.head.merge(col(aggs.head.name)).as(aggs.head.name),
+              aggs.tail.map(a => a.merge(col(a.name)).as(a.name)): _*)
       }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+      merged.write.mode("overwrite").parquet(s"$snapshotDir/v$id")
+      commitVersion(snapshotDir, id)
+    }
 
   /** Read the current committed snapshot version — CDC snapshots get
     * their tombstoned keys filtered out; aggregate views pass through.
@@ -737,24 +718,17 @@ object Streams {
     * same corpus, across multiple arrival waves.
     */
   def curationPipelineStream(docs: DataFrame, storeDir: String,
-                             manifestDir: String, checkpoint: String): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        new java.io.File(storeDir).mkdirs()
-        new java.io.File(manifestDir).mkdirs()
-        batch.write.mode("overwrite").parquet(s"$storeDir/b$id")
-        val corpus = spark.read.parquet(s"$storeDir/b*")
-        graft.operators.Curation.l0PipelineFrom(corpus)
-          .write.mode("overwrite").parquet(s"$manifestDir/v$id")
-        commitVersion(manifestDir, id)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+                             manifestDir: String, checkpoint: String): Unit =
+    drain(docs, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      new java.io.File(storeDir).mkdirs()
+      new java.io.File(manifestDir).mkdirs()
+      batch.write.mode("overwrite").parquet(s"$storeDir/b$id")
+      val corpus = spark.read.parquet(s"$storeDir/b*")
+      graft.operators.Curation.l0PipelineFrom(corpus)
+        .write.mode("overwrite").parquet(s"$manifestDir/v$id")
+      commitVersion(manifestDir, id)
+    }
 
   /** T12: streaming DRIFT MONITOR — score every micro-batch of documents
     * against a static reference token distribution
@@ -772,17 +746,10 @@ object Streams {
     * state update (a batch's KL is not mergeable across batches).
     */
   def runDriftMonitor(docs: DataFrame, ref: DataFrame, checkpoint: String)
-                     (sink: (Long, org.apache.spark.sql.Row) => Unit): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(id, graft.operators.Eval.driftAgainst(batch, ref).head())
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+                     (sink: (Long, org.apache.spark.sql.Row) => Unit): Unit =
+    drain(docs, checkpoint) { (batch, id) =>
+      sink(id, graft.operators.Eval.driftAgainst(batch, ref).head())
+    }
 
   /** T22: streaming MEDIA DECODE — frame-sample arriving media payloads
     * (MJPEG-AVI via [[graft.operators.Multimodal.videoFrameStats]],
@@ -800,17 +767,10 @@ object Streams {
     */
   def runMediaDecode(payloads: DataFrame, checkpoint: String,
                      transform: DataFrame => DataFrame)
-                    (sink: (Long, Array[org.apache.spark.sql.Row]) => Unit): Unit = {
-    val q = transform(payloads).writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(id, batch.collect())
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+                    (sink: (Long, Array[org.apache.spark.sql.Row]) => Unit): Unit =
+    drain(transform(payloads), checkpoint) { (batch, id) =>
+      sink(id, batch.collect())
+    }
 
   /** T18: streaming embedding-DIVERSITY monitor — the M6 metric per
     * micro-batch of arriving vectors against the STATIC offline-trained
@@ -829,17 +789,10 @@ object Streams {
     */
   def runDiversityMonitor(vecs: DataFrame, centroids: DataFrame,
                           checkpoint: String)
-                         (sink: (Long, Array[org.apache.spark.sql.Row]) => Unit): Unit = {
-    val q = vecs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(id, graft.operators.Eval.diversityOf(batch, centroids).collect())
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+                         (sink: (Long, Array[org.apache.spark.sql.Row]) => Unit): Unit =
+    drain(vecs, checkpoint) { (batch, id) =>
+      sink(id, graft.operators.Eval.diversityOf(batch, centroids).collect())
+    }
 
   /** T13: streaming ANN SERVING — answer a stream of query vectors
     * against the persisted PQ index
@@ -876,17 +829,10 @@ object Streams {
     */
   def runImportanceGate(docs: DataFrame, nllRef: DataFrame, bounds: DataFrame,
                         checkpoint: String)
-                       (sink: (Long, DataFrame) => Unit): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(id, graft.operators.Curation.importanceAgainst(batch, nllRef, bounds))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+                       (sink: (Long, DataFrame) => Unit): Unit =
+    drain(docs, checkpoint) { (batch, id) =>
+      sink(id, graft.operators.Curation.importanceAgainst(batch, nllRef, bounds))
+    }
 
   /** T17: streaming LEARNED-CLASSIFIER ADMISSION — the trained
     * counterpart of [[runImportanceGate]]'s LM gate: every arriving
@@ -906,17 +852,10 @@ object Streams {
     */
   def runNbQualityGate(docs: DataFrame, model: graft.operators.TextOps.NbModel,
                        checkpoint: String)
-                      (sink: (Long, DataFrame) => Unit): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(id, graft.operators.TextOps.nbApply(batch, model))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+                      (sink: (Long, DataFrame) => Unit): Unit =
+    drain(docs, checkpoint) { (batch, id) =>
+      sink(id, graft.operators.TextOps.nbApply(batch, model))
+    }
 
   /** T19: STREAMING DECONTAMINATION GATE — arriving train docs checked
     * per micro-batch against a STATIC benchmark corpus (an eval suite is
@@ -947,24 +886,18 @@ object Streams {
     import graft.operators.Curation
     import graft.Ckpt._
     val bench = benchmark.select(col("doc_id"), col("text")).materialize()
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val exact = Curation.contaminatedIds(batch, bench)
-          .withColumn("__ce", lit(true))
-        val fuzzy = Curation.fuzzyContaminatedIds(batch, bench)
-          .withColumn("__cf", lit(true))
-        sink(id, batch
-          .join(exact, Seq("doc_id"), "left")
-          .join(fuzzy, Seq("doc_id"), "left")
-          .withColumn("contaminated_exact", coalesce(col("__ce"), lit(false)))
-          .withColumn("contaminated_fuzzy", coalesce(col("__cf"), lit(false)))
-          .drop("__ce", "__cf"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
+    drain(docs, checkpoint) { (batch, id) =>
+      val exact = Curation.contaminatedIds(batch, bench)
+        .withColumn("__ce", lit(true))
+      val fuzzy = Curation.fuzzyContaminatedIds(batch, bench)
+        .withColumn("__cf", lit(true))
+      sink(id, batch
+        .join(exact, Seq("doc_id"), "left")
+        .join(fuzzy, Seq("doc_id"), "left")
+        .withColumn("contaminated_exact", coalesce(col("__ce"), lit(false)))
+        .withColumn("contaminated_fuzzy", coalesce(col("__cf"), lit(false)))
+        .drop("__ce", "__cf"))
+    }
   }
 
   /** T20: STREAMING CORPUS-OVERLAP MONITOR — the M9 KMV estimate per
@@ -997,17 +930,11 @@ object Streams {
                         k: Int = graft.operators.Eval.KmvK)
                        (sink: (Long, org.apache.spark.sql.Row) => Unit): Unit = {
     require(benchmarkSketch.size <= k, s"benchmark sketch larger than k=$k")
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val sk = graft.operators.Eval.kmvSketchFrame(batch, n = n, k = k)
-          .select(col("sk").as("ska"), typedlit(benchmarkSketch).as("skb"))
-        sink(id, graft.operators.Eval.overlapFromSketches(sk, k).head())
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
+    drain(docs, checkpoint) { (batch, id) =>
+      val sk = graft.operators.Eval.kmvSketchFrame(batch, n = n, k = k)
+        .select(col("sk").as("ska"), typedlit(benchmarkSketch).as("skb"))
+      sink(id, graft.operators.Eval.overlapFromSketches(sk, k).head())
+    }
   }
 
   /** T20b: streaming source-overlap MATRIX monitor — [[runOverlapMonitor]]
@@ -1035,17 +962,11 @@ object Streams {
                               k: Int = graft.operators.Eval.KmvK)
                              (sink: (Long, Seq[org.apache.spark.sql.Row]) => Unit): Unit = {
     require(benchmarkSketch.size <= k, s"benchmark sketch larger than k=$k")
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(id, graft.operators.Eval.sourceVsBenchmarkOverlap(
-          batch, benchmarkSketch, groupCol = groupCol, n = n, k = k)
-          .collect().toSeq)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
+    drain(docs, checkpoint) { (batch, id) =>
+      sink(id, graft.operators.Eval.sourceVsBenchmarkOverlap(
+        batch, benchmarkSketch, groupCol = groupCol, n = n, k = k)
+        .collect().toSeq)
+    }
   }
 
   /** T14: streaming PQ INDEX INGESTION — the write side of the serving
@@ -1096,48 +1017,42 @@ object Streams {
                   onBeforeCommit: Long => Unit = _ => (),
                   onAfterCommit: Long => Unit = _ => ()): Unit = {
     val manifestDir = s"$indexDir/manifest"
-    val q = vectors.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        new java.io.File(manifestDir).mkdirs()
-        import spark.implicits._
-        val prior = latestVersion(manifestDir) match {
-          case Some(v) => spark.read.parquet(s"$manifestDir/v$v")
-            .as[(String, Seq[Long])].collect().toSeq // segment list: index metadata, not data
-          case None => Seq.empty[(String, Seq[Long])]
-        }
-        // replay of a batch some committed segment already covers (crash
-        // after pointer flip, possibly compacted since): commit the
-        // manifest unchanged — re-adding the segment would duplicate rows.
-        // Coverage is per STREAM: ingest ids live on CODE rows only (the
-        // delete stream numbers its own batches on tombstone rows).
-        val rows =
-          if (prior.exists(r => !isTombSegment(r._1) && r._2.contains(id))) prior
-          else {
-            val books = spark.read.parquet(s"$indexDir/codebooks")
-            val segDir = s"$indexDir/codes_seg/b$id"
-            graft.operators.Similarity.encodePq(batch, books)
-              .write.mode("overwrite").parquet(segDir)
-            prior :+ (segDir -> Seq(id))
-          }
-        rows.toDF("segment", "batches")
-          .coalesce(1).write.mode("overwrite").parquet(s"$manifestDir/v$id")
-        // crash-injection seam (StreamingSpec torn-commit soak): a death
-        // here — segment + manifest version fully written, pointer not
-        // flipped — is the protocol's critical window; replay must
-        // rebuild the same segment and version idempotently
-        onBeforeCommit(id)
-        commitVersion(manifestDir, id)
-        // second crash-injection seam: death here — pointer flipped, the
-        // streaming checkpoint NOT yet holding the batch — is the window
-        // the covered-batch check closes
-        onAfterCommit(id)
-        ()
+    drain(vectors, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      new java.io.File(manifestDir).mkdirs()
+      import spark.implicits._
+      val prior = latestVersion(manifestDir) match {
+        case Some(v) => spark.read.parquet(s"$manifestDir/v$v")
+          .as[(String, Seq[Long])].collect().toSeq // segment list: index metadata, not data
+        case None => Seq.empty[(String, Seq[Long])]
       }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
+      // replay of a batch some committed segment already covers (crash
+      // after pointer flip, possibly compacted since): commit the
+      // manifest unchanged — re-adding the segment would duplicate rows.
+      // Coverage is per STREAM: ingest ids live on CODE rows only (the
+      // delete stream numbers its own batches on tombstone rows).
+      val rows =
+        if (prior.exists(r => !isTombSegment(r._1) && r._2.contains(id))) prior
+        else {
+          val books = spark.read.parquet(s"$indexDir/codebooks")
+          val segDir = s"$indexDir/codes_seg/b$id"
+          graft.operators.Similarity.encodePq(batch, books)
+            .write.mode("overwrite").parquet(segDir)
+          prior :+ (segDir -> Seq(id))
+        }
+      rows.toDF("segment", "batches")
+        .coalesce(1).write.mode("overwrite").parquet(s"$manifestDir/v$id")
+      // crash-injection seam (StreamingSpec torn-commit soak): a death
+      // here — segment + manifest version fully written, pointer not
+      // flipped — is the protocol's critical window; replay must
+      // rebuild the same segment and version idempotently
+      onBeforeCommit(id)
+      commitVersion(manifestDir, id)
+      // second crash-injection seam: death here — pointer flipped, the
+      // streaming checkpoint NOT yet holding the batch — is the window
+      // the covered-batch check closes
+      onAfterCommit(id)
+    }
   }
 
   /** T14b: streaming PQ INDEX DELETION — the index-maintenance half the
@@ -1172,33 +1087,27 @@ object Streams {
                   onBeforeCommit: Long => Unit = _ => (),
                   onAfterCommit: Long => Unit = _ => ()): Unit = {
     val manifestDir = s"$indexDir/manifest"
-    val q = dropIds.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val v = latestVersion(manifestDir).getOrElse(throw new IllegalStateException(
-          s"no committed manifest in $manifestDir — deletes require an ingested index"))
-        val prior = spark.read.parquet(s"$manifestDir/v$v")
-          .as[(String, Seq[Long])].collect().toSeq
-        val rows =
-          if (prior.exists(r => isTombSegment(r._1) && r._2.contains(id))) prior
-          else {
-            val tombDir = s"$indexDir/tomb_seg/d$id"
-            batch.select(col("vec_id")).distinct()
-              .write.mode("overwrite").parquet(tombDir)
-            prior :+ (tombDir -> Seq(id))
-          }
-        rows.toDF("segment", "batches")
-          .coalesce(1).write.mode("overwrite").parquet(s"$manifestDir/v${DeleteIdBase + id}")
-        onBeforeCommit(id) // crash seam: torn version, pointer not flipped
-        commitVersion(manifestDir, DeleteIdBase + id)
-        onAfterCommit(id) // crash seam: pointer flipped, checkpoint behind
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
+    drain(dropIds, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val v = latestVersion(manifestDir).getOrElse(throw new IllegalStateException(
+        s"no committed manifest in $manifestDir — deletes require an ingested index"))
+      val prior = spark.read.parquet(s"$manifestDir/v$v")
+        .as[(String, Seq[Long])].collect().toSeq
+      val rows =
+        if (prior.exists(r => isTombSegment(r._1) && r._2.contains(id))) prior
+        else {
+          val tombDir = s"$indexDir/tomb_seg/d$id"
+          batch.select(col("vec_id")).distinct()
+            .write.mode("overwrite").parquet(tombDir)
+          prior :+ (tombDir -> Seq(id))
+        }
+      rows.toDF("segment", "batches")
+        .coalesce(1).write.mode("overwrite").parquet(s"$manifestDir/v${DeleteIdBase + id}")
+      onBeforeCommit(id) // crash seam: torn version, pointer not flipped
+      commitVersion(manifestDir, DeleteIdBase + id)
+      onAfterCommit(id) // crash seam: pointer flipped, checkpoint behind
+    }
   }
 
   /** Segment GC for a [[runPqIngest]] index: rewrite the committed
@@ -1374,33 +1283,26 @@ object Streams {
   def runAnnServe(queries: DataFrame, indexDir: String, k: Int,
                   rescoreFrom: DataFrame, checkpoint: String,
                   maxQueriesPerBatch: Int = AnnServeMaxQueriesPerBatch)
-                 (sink: (Long, DataFrame) => Unit): Unit = {
-    val q = queries.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        // the probe broadcasts the query frame into every stage; a
-        // micro-batch source is re-playable but not broadcast-friendly,
-        // so pin the (KB-sized by contract) batch as a local frame first.
-        // limit(cap+1) bounds what can ever reach the driver: the
-        // oversize CHECK itself must not collect the oversized batch.
-        val rows = batch.limit(maxQueriesPerBatch + 1).collect()
-        if (rows.length > maxQueriesPerBatch)
-          throw new IllegalStateException(
-            s"ANN serve batch $id exceeds $maxQueriesPerBatch query rows; " +
-            "this path collects the query batch to the driver by design — " +
-            "route bulk scoring through the batch probe (probePqIndexBatch) instead")
-        val qFrame = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-          batch.schema)
-        sink(id, graft.operators.Similarity.probePqIndexBatch(
-          spark, indexDir, qFrame, k, rescoreFrom))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
+                 (sink: (Long, DataFrame) => Unit): Unit =
+    drain(queries, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      // the probe broadcasts the query frame into every stage; a
+      // micro-batch source is re-playable but not broadcast-friendly,
+      // so pin the (KB-sized by contract) batch as a local frame first.
+      // limit(cap+1) bounds what can ever reach the driver: the
+      // oversize CHECK itself must not collect the oversized batch.
+      val rows = batch.limit(maxQueriesPerBatch + 1).collect()
+      if (rows.length > maxQueriesPerBatch)
+        throw new IllegalStateException(
+          s"ANN serve batch $id exceeds $maxQueriesPerBatch query rows; " +
+          "this path collects the query batch to the driver by design — " +
+          "route bulk scoring through the batch probe (probePqIndexBatch) instead")
+      val qFrame = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
+        batch.schema)
+      sink(id, graft.operators.Similarity.probePqIndexBatch(
+        spark, indexDir, qFrame, k, rescoreFrom))
+    }
 
   /** T16: STREAMING SEMANTIC DEDUP — L11 as an admission stream.
     * Vectors arrive as (vec_id, embedding) waves; each wave is assigned
@@ -1475,34 +1377,28 @@ object Streams {
                            onAfterStore: Long => Unit = _ => ())
                           (sink: (Long, DataFrame) => Unit): Unit = {
     import graft.operators.{Dedup, TextOps}
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        new java.io.File(storeDir).mkdirs()
-        // enforce the nondecreasing-doc_id arrival contract BEFORE the
-        // store write: prior waves only (a replayed wave re-checks
-        // against the same priors it originally saw)
-        val priorDirs = substrPriorDirs(storeDir, id)
-        enforceSubstrIdOrder(spark, priorDirs, batch, id, "runSubstrDedupStream")
-        Dedup.spanStarts(batch, n, TextOps.spaceTokenizer)
-          .filter(col("p").isNotNull)
-          .select(col("doc_id"), col("p"), col("h"))
-          .write.mode("overwrite").parquet(s"$storeDir/b$id")
-        // crash-injection seam: a death here (wave store written, rewrite
-        // not sunk, checkpoint not holding the batch) replays as the same
-        // idempotent overwrite + the same rewrite
-        onAfterStore(id)
-        val wave = spark.read.parquet(s"$storeDir/b$id")
-        val acc = spark.read.parquet(s"$storeDir/b*")
-          .join(wave.select("h").distinct(), "h")
-        val rm = Dedup.removalStarts(wave, acc)
-        sink(id, Dedup.rewriteWithRemovals(batch, rm, n, TextOps.spaceTokenizer))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
+    drain(docs, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      new java.io.File(storeDir).mkdirs()
+      // enforce the nondecreasing-doc_id arrival contract BEFORE the
+      // store write: prior waves only (a replayed wave re-checks
+      // against the same priors it originally saw)
+      val priorDirs = substrPriorDirs(storeDir, id)
+      enforceSubstrIdOrder(spark, priorDirs, batch, id, "runSubstrDedupStream")
+      Dedup.spanStarts(batch, n, TextOps.spaceTokenizer)
+        .filter(col("p").isNotNull)
+        .select(col("doc_id"), col("p"), col("h"))
+        .write.mode("overwrite").parquet(s"$storeDir/b$id")
+      // crash-injection seam: a death here (wave store written, rewrite
+      // not sunk, checkpoint not holding the batch) replays as the same
+      // idempotent overwrite + the same rewrite
+      onAfterStore(id)
+      val wave = spark.read.parquet(s"$storeDir/b$id")
+      val acc = spark.read.parquet(s"$storeDir/b*")
+        .join(wave.select("h").distinct(), "h")
+      val rm = Dedup.removalStarts(wave, acc)
+      sink(id, Dedup.rewriteWithRemovals(batch, rm, n, TextOps.spaceTokenizer))
+    }
   }
 
   /** Prior-wave store directories of a T21-family span store,
@@ -1595,103 +1491,97 @@ object Streams {
                                    (sink: (Long, DataFrame) => Unit): Unit = {
     import graft.Ckpt._
     import graft.operators.{Dedup, TextOps}
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        new java.io.File(storeDir).mkdirs()
-        val priorDirs = substrPriorDirs(storeDir, id)
-        // per prior wave: its snapshot indices, ascending (p0 always
-        // exists — bounded directory metadata)
-        val priorSnaps: Seq[(String, Seq[Int])] = priorDirs.map { d =>
-          val idxs = Option(new java.io.File(d).listFiles())
-            .getOrElse(Array.empty)
-            .filter(f => f.isDirectory && f.getName.startsWith("p"))
-            .map(_.getName.drop(1).toInt).sorted.toIndexedSeq
-          (d, idxs)
-        }
-        val p0Dirs = priorSnaps.map { case (d, _) => s"$d/p0" }
-        if (p0Dirs.nonEmpty)
-          enforceSubstrIdOrder(spark,
-            p0Dirs, batch, id, "runSubstrDedupConvergedStream")
-        val prefixHorizon = (0 +: priorSnaps.flatMap(_._2.lastOption)).max
-        def priorUniverse(rMinus1: Int): Seq[String] = priorSnaps.map {
-          case (d, idxs) =>
-            s"$d/p${idxs.filter(_ <= rMinus1).lastOption.getOrElse(0)}"
-        }
-        val tok = TextOps.spaceTokenizer
-        def spansOf(df: DataFrame) =
-          Dedup.spanStarts(df.select(col("doc_id"), col("text")), n, tok)
-            .filter(col("p").isNotNull)
-            .select(col("doc_id"), col("p"), col("h"))
-        var cur = batch.select(col("doc_id"),
-          size(tok(col("text"))).cast("long").as("n_tokens0"),
-          lit(0L).as("removed_total"), col("text"))
-        // p0: the wave's as-arrived spans (idempotent overwrite)
-        spansOf(cur).write.mode("overwrite").parquet(s"$storeDir/b$id/p0")
-        var prevTotal = 0L
-        var effectiveRounds = 0
-        var converged = false
-        var round = 0
-        while (!converged && round < maxRounds + prefixHorizon) {
-          round += 1
-          val waveSpans = spansOf(cur)
-          val priorPaths = priorUniverse(round - 1)
-          val prior =
-            if (priorPaths.nonEmpty)
-              spark.read.parquet(priorPaths: _*)
-                .join(waveSpans.select("h").distinct(), "h")
-            else waveSpans.limit(0)
-          val rm = Dedup.removalStarts(waveSpans, prior.unionByName(waveSpans))
-          val out = Dedup.rewriteWithRemovals(
-            cur.select(col("doc_id"), col("text")), rm, n, tok)
-          cur = cur.select(col("doc_id"), col("n_tokens0"), col("removed_total"))
-            .join(out.select(col("doc_id"), col("n_removed"),
-              col("text_clean").as("text")), "doc_id")
-            .select(col("doc_id"), col("n_tokens0"),
-              (col("removed_total") + col("n_removed")).as("removed_total"),
-              col("text"))
-            .materialize()
-          val total = cur.agg(coalesce(sum(col("removed_total")), lit(0L)))
-            .first().getLong(0)
-          if (total == prevTotal) {
-            // quiet pass: genuine convergence only once the prefix
-            // snapshots can no longer advance the universe
-            if (round - 1 >= prefixHorizon) converged = true
-            else {
-              // guaranteed-quiet skip (ADVICE r13): the wave text is
-              // unchanged, so a later pass can only remove something if
-              // the prior-wave SNAPSHOT SELECTION advances — re-running
-              // rounds whose priorUniverse equals this one would repeat
-              // the identical pass (two hash aggregates + rewrite +
-              // count) for a guaranteed-quiet answer. Jump to the first
-              // round whose selection differs; none left → converged.
-              val curSel = priorUniverse(round - 1)
-              var r = round + 1
-              while (r - 1 <= prefixHorizon && priorUniverse(r - 1) == curSel)
-                r += 1
-              if (r - 1 > prefixHorizon) converged = true
-              else round = r - 1 // loop head increments into round r
-            }
-          } else {
-            effectiveRounds += 1
-            prevTotal = total
-            // text changed at pass `round` — snapshot it for later waves
-            spansOf(cur).write.mode("overwrite")
-              .parquet(s"$storeDir/b$id/p$round")
-          }
-        }
-        onAfterStore(id)
-        sink(id, cur.select(col("doc_id"),
-          col("n_tokens0").as("n_tokens"),
-          col("removed_total").as("n_removed"),
-          lit(effectiveRounds).as("rounds"),
-          col("text").as("text_clean")))
-        ()
+    drain(docs, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      new java.io.File(storeDir).mkdirs()
+      val priorDirs = substrPriorDirs(storeDir, id)
+      // per prior wave: its snapshot indices, ascending (p0 always
+      // exists — bounded directory metadata)
+      val priorSnaps: Seq[(String, Seq[Int])] = priorDirs.map { d =>
+        val idxs = Option(new java.io.File(d).listFiles())
+          .getOrElse(Array.empty)
+          .filter(f => f.isDirectory && f.getName.startsWith("p"))
+          .map(_.getName.drop(1).toInt).sorted.toIndexedSeq
+        (d, idxs)
       }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
+      val p0Dirs = priorSnaps.map { case (d, _) => s"$d/p0" }
+      if (p0Dirs.nonEmpty)
+        enforceSubstrIdOrder(spark,
+          p0Dirs, batch, id, "runSubstrDedupConvergedStream")
+      val prefixHorizon = (0 +: priorSnaps.flatMap(_._2.lastOption)).max
+      def priorUniverse(rMinus1: Int): Seq[String] = priorSnaps.map {
+        case (d, idxs) =>
+          s"$d/p${idxs.filter(_ <= rMinus1).lastOption.getOrElse(0)}"
+      }
+      val tok = TextOps.spaceTokenizer
+      def spansOf(df: DataFrame) =
+        Dedup.spanStarts(df.select(col("doc_id"), col("text")), n, tok)
+          .filter(col("p").isNotNull)
+          .select(col("doc_id"), col("p"), col("h"))
+      var cur = batch.select(col("doc_id"),
+        size(tok(col("text"))).cast("long").as("n_tokens0"),
+        lit(0L).as("removed_total"), col("text"))
+      // p0: the wave's as-arrived spans (idempotent overwrite)
+      spansOf(cur).write.mode("overwrite").parquet(s"$storeDir/b$id/p0")
+      var prevTotal = 0L
+      var effectiveRounds = 0
+      var converged = false
+      var round = 0
+      while (!converged && round < maxRounds + prefixHorizon) {
+        round += 1
+        val waveSpans = spansOf(cur)
+        val priorPaths = priorUniverse(round - 1)
+        val prior =
+          if (priorPaths.nonEmpty)
+            spark.read.parquet(priorPaths: _*)
+              .join(waveSpans.select("h").distinct(), "h")
+          else waveSpans.limit(0)
+        val rm = Dedup.removalStarts(waveSpans, prior.unionByName(waveSpans))
+        val out = Dedup.rewriteWithRemovals(
+          cur.select(col("doc_id"), col("text")), rm, n, tok)
+        cur = cur.select(col("doc_id"), col("n_tokens0"), col("removed_total"))
+          .join(out.select(col("doc_id"), col("n_removed"),
+            col("text_clean").as("text")), "doc_id")
+          .select(col("doc_id"), col("n_tokens0"),
+            (col("removed_total") + col("n_removed")).as("removed_total"),
+            col("text"))
+          .materialize()
+        val total = cur.agg(coalesce(sum(col("removed_total")), lit(0L)))
+          .first().getLong(0)
+        if (total == prevTotal) {
+          // quiet pass: genuine convergence only once the prefix
+          // snapshots can no longer advance the universe
+          if (round - 1 >= prefixHorizon) converged = true
+          else {
+            // guaranteed-quiet skip (ADVICE r13): the wave text is
+            // unchanged, so a later pass can only remove something if
+            // the prior-wave SNAPSHOT SELECTION advances — re-running
+            // rounds whose priorUniverse equals this one would repeat
+            // the identical pass (two hash aggregates + rewrite +
+            // count) for a guaranteed-quiet answer. Jump to the first
+            // round whose selection differs; none left → converged.
+            val curSel = priorUniverse(round - 1)
+            var r = round + 1
+            while (r - 1 <= prefixHorizon && priorUniverse(r - 1) == curSel)
+              r += 1
+            if (r - 1 > prefixHorizon) converged = true
+            else round = r - 1 // loop head increments into round r
+          }
+        } else {
+          effectiveRounds += 1
+          prevTotal = total
+          // text changed at pass `round` — snapshot it for later waves
+          spansOf(cur).write.mode("overwrite")
+            .parquet(s"$storeDir/b$id/p$round")
+        }
+      }
+      onAfterStore(id)
+      sink(id, cur.select(col("doc_id"),
+        col("n_tokens0").as("n_tokens"),
+        col("removed_total").as("n_removed"),
+        lit(effectiveRounds).as("rounds"),
+        col("text").as("text_clean")))
+    }
   }
 
   def runSemanticDedupStream(vectors: DataFrame, storeDir: String, checkpoint: String,
@@ -1700,43 +1590,37 @@ object Streams {
                              onAfterStore: Long => Unit = _ => ())
                             (sink: (Long, DataFrame) => Unit = (_, _) => ()): Unit = {
     import graft.operators.Similarity
-    val q = vectors.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        new java.io.File(storeDir).mkdirs()
-        val cells = Similarity.assignCells(batch, centroids)
-        cells.write.mode("overwrite").parquet(s"$storeDir/b$id")
-        // crash-injection seam (StreamingSpec torn-write soak): a death
-        // here — wave store written, labels not sunk, checkpoint not
-        // holding the batch — is the protocol's critical window; replay
-        // overwrites the same b<id> with identical content and labels
-        // the wave once, so the accumulated label set is unchanged
-        onAfterStore(id)
-        // bounded metadata collect: the wave's distinct cell ids (≤ the
-        // quantizer's cell count)
-        val touched = spark.read.parquet(s"$storeDir/b$id")
-          .select("cell").distinct().collect().map(_.getLong(0))
-        val prior = spark.read.parquet(s"$storeDir/b*")
-          .filter(col("cell").isin(touched.toIndexedSeq: _*))
-        def dbl(c: Column) = transform(c, _.cast("double"))
-        val dropped = spark.read.parquet(s"$storeDir/b$id").as("a")
-          .join(prior.as("p"),
-            col("a.cell") === col("p.cell") && col("p.vec_id") < col("a.vec_id"))
-          .filter(graft.functions.CosineFast(col("a.embedding"), col("p.embedding"))
-            >= tau - Similarity.SemPrefilterEps)
-          .filter(Similarity.cosine(dbl(col("a.embedding")), dbl(col("p.embedding"))) >= tau)
-          .select(col("a.vec_id").as("vec_id")).distinct()
-          .withColumn("dropped", lit(true))
-        val annotated = cells.select(col("vec_id"), col("cell"))
-          .join(dropped, Seq("vec_id"), "left")
-          .select(col("vec_id"), col("cell"),
-            coalesce(col("dropped"), lit(false)).as("dropped"))
-        sink(id, annotated)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
+    drain(vectors, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      new java.io.File(storeDir).mkdirs()
+      val cells = Similarity.assignCells(batch, centroids)
+      cells.write.mode("overwrite").parquet(s"$storeDir/b$id")
+      // crash-injection seam (StreamingSpec torn-write soak): a death
+      // here — wave store written, labels not sunk, checkpoint not
+      // holding the batch — is the protocol's critical window; replay
+      // overwrites the same b<id> with identical content and labels
+      // the wave once, so the accumulated label set is unchanged
+      onAfterStore(id)
+      // bounded metadata collect: the wave's distinct cell ids (≤ the
+      // quantizer's cell count)
+      val touched = spark.read.parquet(s"$storeDir/b$id")
+        .select("cell").distinct().collect().map(_.getLong(0))
+      val prior = spark.read.parquet(s"$storeDir/b*")
+        .filter(col("cell").isin(touched.toIndexedSeq: _*))
+      def dbl(c: Column) = transform(c, _.cast("double"))
+      val dropped = spark.read.parquet(s"$storeDir/b$id").as("a")
+        .join(prior.as("p"),
+          col("a.cell") === col("p.cell") && col("p.vec_id") < col("a.vec_id"))
+        .filter(graft.functions.CosineFast(col("a.embedding"), col("p.embedding"))
+          >= tau - Similarity.SemPrefilterEps)
+        .filter(Similarity.cosine(dbl(col("a.embedding")), dbl(col("p.embedding"))) >= tau)
+        .select(col("a.vec_id").as("vec_id")).distinct()
+        .withColumn("dropped", lit(true))
+      val annotated = cells.select(col("vec_id"), col("cell"))
+        .join(dropped, Seq("vec_id"), "left")
+        .select(col("vec_id"), col("cell"),
+          coalesce(col("dropped"), lit(false)).as("dropped"))
+      sink(id, annotated)
+    }
   }
 }

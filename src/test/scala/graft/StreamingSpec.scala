@@ -244,6 +244,25 @@ class StreamingSpec extends SparkSuite {
     assert(MqOffset.parse(MqOffset(Array(0L, 7L, 42L)).json()).ends.toSeq == Seq(0L, 7L, 42L))
   }
 
+  test("T8/S2e runs without a caller checkpoint leave no temp checkpoint dir behind") {
+    val name = s"t8_leak_${System.nanoTime()}"
+    val prefixes = Seq(s"graft-cp-$name", "graft-cp-s2adm")
+    def cpDirs(): Set[String] =
+      Option(new java.io.File(sys.props("java.io.tmpdir")).list()).toSeq.flatten
+        .filter(n => prefixes.exists(n.startsWith)).toSet
+    val before = cpDirs()
+    val topic = "t_leak"
+    MqBroker.deleteTopic(topic)
+    MqBroker.createTopic(topic, 2)
+    (1 to 5).foreach(i => MqBroker.publish(topic, s"k$i", s"v$i", 0L))
+    val got = Streams.runAvailableNow(Streams.mqStream(spark, topic), name, OutputMode.Append)
+    assert(got.count() == 5L)
+    assert(Streams.s2Admission(spark, sf).count() > 0L)
+    val leaked = cpDirs() -- before
+    assert(leaked.isEmpty, s"temp checkpoint dirs left behind: $leaked")
+    MqBroker.deleteTopic(topic)
+  }
+
   test("T1 tumbling window: streaming == batch twin (exact, Det.davg discipline)") {
     val batchDecoded = publishEvents("t_tumbling")
     val streamed = Streams.runAvailableNow(

@@ -5,7 +5,13 @@ Usage: tools/check.py <sfDir> <verifyOutDir>
 
 Reads each <verifyOutDir>/<name>/ parquet (Spark result), runs the matching
 oracle SQL from oracle_sql.json in DuckDB over the fixture tables, and
-compares values column-name-sorted, order-sensitively and -insensitively.
+requires three things of each pair:
+  - equal column names and equal DuckDB column types;
+  - equal values (fetchall() Python values, column-name-sorted), in order
+    or as multisets;
+  - equal `.df()`-rendered rows as multisets. A pandas frame shows what a
+    fetchall() hides: a HUGEINT oracle column renders as float64 (40.0)
+    where the engine's BIGINT renders as int64 (40).
 Dev tool only — not part of the library (driver has duckdb; our engine
 doesn't depend on it).
 """
@@ -26,6 +32,36 @@ def rows_key(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     return [tuple(norm_cell(r[i]) for i in order) for r in rows]
 
+def render_cell(v):
+    """One `.df()` cell as text; numpy scalars keep their dtype's form."""
+    if v is None:
+        return "NULL"
+    if hasattr(v, "tolist") and not isinstance(v, (str, bytes)):
+        v = v.tolist()
+    if isinstance(v, float):
+        return "NaN" if math.isnan(v) else repr(v)
+    if isinstance(v, (list, tuple)):
+        return "[" + ",".join(render_cell(x) for x in v) + "]"
+    if isinstance(v, dict):
+        return "{" + ",".join(f"{render_cell(k)}:{render_cell(x)}" for k, x in v.items()) + "}"
+    return repr(v)
+
+def rendered_rows(rel):
+    cols = rel.columns
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    df = rel.df()
+    return sorted(tuple(render_cell(df.iat[r, i]) for i in order) for r in range(len(df)))
+
+def print_diff(spark_rows, duck_rows):
+    sset, dset = set(spark_rows), set(duck_rows)
+    for x in list(sset - dset)[:3]:
+        print(f"   spark-only: {x}")
+    for x in list(dset - sset)[:3]:
+        print(f"   duck-only:  {x}")
+
+def types_by_name(rel):
+    return sorted(zip(rel.columns, (str(t) for t in rel.types)))
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -42,23 +78,26 @@ def main(sf_dir, out_dir):
             scols, srows = spark_rel.columns, spark_rel.fetchall()
             duck_rel = con.sql(sql)
             dcols, drows = duck_rel.columns, duck_rel.fetchall()
+            s_types, d_types = types_by_name(spark_rel), types_by_name(duck_rel)
+            s_rendered, d_rendered = rendered_rows(spark_rel), rendered_rows(duck_rel)
         except Exception as e:
             print(f"FAIL {name}: {e}"); n_fail += 1; continue
         if sorted(scols) != sorted(dcols):
             print(f"FAIL {name}: cols spark={sorted(scols)} duck={sorted(dcols)}"); n_fail += 1; continue
+        if s_types != d_types:
+            diff = [(c, t, u) for (c, t), (_, u) in zip(s_types, d_types) if t != u]
+            print(f"FAIL {name}: column types differ (column, spark, duck): {diff}"); n_fail += 1; continue
         sk, dk = rows_key(scols, srows), rows_key(dcols, drows)
-        if sk == dk:
-            print(f"PASS {name} ({len(srows)} rows)"); n_pass += 1
-        elif sorted(sk) == sorted(dk):
-            print(f"PASS* {name} ({len(srows)} rows; order differs)"); n_pass += 1
-        else:
-            n_fail += 1
+        if sorted(sk) != sorted(dk):
             print(f"FAIL {name}: rows spark={len(srows)} duck={len(drows)}")
-            sset, dset = set(sk), set(dk)
-            for x in list(sset - dset)[:3]:
-                print(f"   spark-only: {x}")
-            for x in list(dset - sset)[:3]:
-                print(f"   duck-only:  {x}")
+            print_diff(sk, dk); n_fail += 1
+        elif s_rendered != d_rendered:
+            print(f"FAIL {name}: .df()-rendered rows differ")
+            print_diff(s_rendered, d_rendered); n_fail += 1
+        elif sk == dk:
+            print(f"PASS {name} ({len(srows)} rows)"); n_pass += 1
+        else:
+            print(f"PASS* {name} ({len(srows)} rows; order differs)"); n_pass += 1
     # names declared in queries but absent from oracle: rows-only check
     import os
     for d in sorted(glob.glob(f"{out_dir}/*/")):

@@ -16,7 +16,7 @@ for sf in "${@:-0.001 0.01 0.1}"; do
     # earlier run for check.py to silently pass against
     rm -rf "$out"
     log="/tmp/graft_sweep_sf$s.log"
-    if ! SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
+    if ! \
         tools/run.sh graft.Verify "/root/testdata/sf$s" "$out" >"$log" 2>&1; then
       echo "VERIFY CRASHED at sf$s — tail of $log:"; tail -20 "$log"; exit 1
     fi
