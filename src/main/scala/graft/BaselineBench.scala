@@ -1487,7 +1487,8 @@ object Twins {
   def main(args: Array[String]): Unit = {
     val bigSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val smallSf = sys.env.getOrElse("SPARK_GRAFT_TWINS_SMALL_SF_DIR", "/root/testdata/sf0.01")
-    val out = sys.env.getOrElse("SPARK_GRAFT_TWINS_OUT", "/root/repo/TWINS.json")
+    val out = sys.env.getOrElse("SPARK_GRAFT_TWINS_OUT",
+      java.nio.file.Paths.get(sys.props("user.dir"), "TWINS.json").toString)
     // vanilla side first — each sf in its own stock session
     val twinBig = TailTwins.run(bigSf, n => !SmallSfTwins(n))
     val twinSmall = TailTwins.run(smallSf, SmallSfTwins)

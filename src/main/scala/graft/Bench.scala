@@ -217,7 +217,7 @@ object Bench {
         "diverting artifact to /tmp (committed BENCH_FULL.json left untouched)")
     val defaultOut =
       if (headlineOnly || singleShot || only.isDefined || contended) "/tmp/BENCH_FULL.json"
-      else "/root/repo/BENCH_FULL.json"
+      else java.nio.file.Paths.get(sys.props("user.dir"), "BENCH_FULL.json").toString
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
     // The ONE-LINE contract the driver parses is the LAST JSON line of
     // stdout, and per the r16 verdict it must carry the FULL per-query

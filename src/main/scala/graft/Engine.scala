@@ -45,15 +45,12 @@ object Engine {
       // bypass threshold) the sort writer is what runs anyway, so the
       // default-200 bypass only ever engaged in small local runs.
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // Local default only (a cluster sets its fast local disks via
-      // spark-submit / spark-defaults): shuffle + spill files on the
-      // sandbox's root disk pay a real file-create/write cost per block;
-      // tmpfs removes it (a further ~15% on the shuffle-bound loop
-      // above). Guarded so environments without a writable /dev/shm fall
-      // back to the JVM tmpdir unchanged.
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-spark-local"
-        else sys.props("java.io.tmpdir")))
+      .config("spark.local.dir", localDir)
+      // Streaming checkpoints (offset/commit logs, state-store files)
+      // write local paths through java.nio instead of forking a shell per
+      // file; remote schemes keep Spark's manager (see the class).
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -69,6 +66,22 @@ object Engine {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The engine's local scratch root: shuffle and spill files
+    * (`spark.local.dir`) and the s6 round-trip staging dirs. Local default
+    * only — a cluster sets its fast local disks via spark-submit.
+    * `SPARK_GRAFT_LOCAL_DIR` when set; else `/dev/shm` when it is writable
+    * and has at least 4 GiB usable, since files on the root disk pay a
+    * real create/write cost per block (tmpfs took a further ~15% off the
+    * shuffle-bound pagerank loop); else the JVM tmpdir. The space gate
+    * matters because tmpfs is RAM: on a container's 64 MB default, spills
+    * would fail with ENOSPC instead of relieving memory.
+    */
+  lazy val localDir: String = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.canWrite && shm.getUsableSpace >= (4L << 30)) "/dev/shm/graft-spark-local"
+    else sys.props("java.io.tmpdir")
+  })
 
   /** `SPARK_GRAFT_CPUS` when set, else the host's processor count. */
   def defaultCores: Int =

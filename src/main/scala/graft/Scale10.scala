@@ -227,7 +227,7 @@ object Scale10 {
     val factor = args.drop(2).headOption.map(_.toInt).getOrElse(DefaultFactor)
     require(factor >= 2, s"factor must be >= 2, got $factor")
     val outJson = sys.env.getOrElse("SPARK_GRAFT_SCALE10_OUT",
-      "/root/repo/SCALE10.json")
+      java.nio.file.Paths.get(sys.props("user.dir"), "SCALE10.json").toString)
     require(!work.startsWith("/root/testdata"), "workDir must not touch the fixtures")
     val tenx = s"$work/sf${factor}x"
     val marker = java.nio.file.Paths.get(s"$work/.synth_from_$factor")

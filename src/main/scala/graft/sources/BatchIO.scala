@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{Det, Tables}
+import graft.{Det, Engine, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,33 +23,48 @@ object BatchIO {
 
   // Per-process token: two concurrent runs over the same fixture dir (bench
   // + correctness drivers, or two users sharing /tmp) must not race an
-  // overwrite-write against the other's lazy read. hex(hashCode) avoids the
-  // math.abs(Int.MinValue) < 0 edge.
+  // overwrite-write against the other's lazy read. The token is the hex
+  // PID, which also lets a later process tell a dead run's dirs apart.
   private val runToken = java.lang.Long.toHexString(ProcessHandle.current().pid())
 
   // Per-process staging dirs are deleted on JVM exit (otherwise every run
-  // leaks a fresh graft_s6_* tree into /tmp — unbounded growth across
-  // bench/correctness runs). Tracked explicitly so the hook removes only
-  // dirs this process created.
+  // leaks a fresh graft_s6_* tree — unbounded growth across bench and
+  // correctness runs). Tracked explicitly so the hook removes only dirs
+  // this process created.
   private val staged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  sys.addShutdownHook {
-    staged.forEach { d =>
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(d))
-    }
+  sys.addShutdownHook(staged.forEach(d => deleteTree(new java.io.File(d))))
+
+  private def deleteTree(f: java.io.File): Unit = {
+    val kids = f.listFiles()
+    if (kids != null) kids.foreach(deleteTree)
+    f.delete(): Unit
   }
 
-  // Staging root follows the engine's fast-local-dir choice (see
-  // Engine.session's spark.local.dir note): the roundtrip files are
-  // per-process scratch, and /tmp on the sandbox's root disk pays a real
-  // create/write cost per part file. Env-overridable, tmpdir fallback.
-  private val stageRoot = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-    if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-spark-local"
-    else sys.props("java.io.tmpdir"))
+  // Staging root is the engine's local scratch dir (see Engine.localDir):
+  // the round-trip files are per-process scratch, and the root disk pays
+  // a real create/write cost per part file.
+  private lazy val stageRoot = {
+    sweepStale(Engine.localDir)
+    Engine.localDir
+  }
+
+  private val StagedName = """graft_s6_[a-z]+_[0-9a-f]+_([0-9a-f]{1,15})""".r
+
+  /** Delete the `graft_s6_*` staging dirs under `root` whose owning
+    * process is gone: a killed or crashed run never reaches the shutdown
+    * hook, and on a tmpfs root its trees hold RAM until reboot. A live
+    * PID's dirs are never touched. Returns the names deleted.
+    */
+  private[graft] def sweepStale(root: String): Seq[String] =
+    Option(new java.io.File(root).listFiles()).toSeq.flatten.flatMap { d =>
+      d.getName match {
+        case StagedName(pid)
+            if ProcessHandle.of(java.lang.Long.parseLong(pid, 16)).isEmpty =>
+          deleteTree(d)
+          Some(d.getName)
+        case _ => None
+      }
+    }
 
   private def stage(dir: String, fmt: String): String = {
     val d = s"$stageRoot/graft_s6_${fmt}_${Integer.toHexString(dir.hashCode)}_$runToken"

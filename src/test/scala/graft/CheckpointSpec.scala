@@ -1,5 +1,12 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+
+import graft.streaming.LocalCheckpointFileManager
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+  FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
 
 /** The `spark.graft.checkpoint.dir` switch (see [[graft.Ckpt]]): one
@@ -8,6 +15,10 @@ import org.apache.spark.sql.functions._
   * reliable checkpoint files (the executor-loss-safe posture for
   * multi-hour 100 TB runs). Both paths must produce identical results on
   * the iterative operators that depend on the barrier.
+  *
+  * Also the streaming checkpoint file manager the engine's session
+  * registers ([[graft.streaming.LocalCheckpointFileManager]]): its atomic
+  * commit contract, and files left by Spark's stock manager.
   */
 class CheckpointSpec extends SparkSuite {
   import TestSpark.spark.implicits._
@@ -44,5 +55,65 @@ class CheckpointSpec extends SparkSuite {
     Dedup.connectedComponents(ids, pairs).collect()
     val after = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).count()
     assert(after == before, "flag unset but reliable checkpoints still written")
+  }
+
+  private def manager(dir: String): CheckpointFileManager =
+    CheckpointFileManager.create(new Path(dir), spark.sessionState.newHadoopConf())
+
+  private def write(fm: CheckpointFileManager, p: Path, text: String,
+                    overwrite: Boolean): Unit = {
+    val out = fm.createAtomic(p, overwrite)
+    try {
+      out.write(text.getBytes(UTF_8))
+      out.close()
+    } catch { case e: Throwable => out.cancel(); throw e }
+  }
+
+  private def read(fm: CheckpointFileManager, p: Path): String = {
+    val in = fm.open(p)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
+
+  test("the engine session's streaming checkpoints go through the nio file manager") {
+    assert(manager(tempDir("graft-cpm").toString).isInstanceOf[LocalCheckpointFileManager])
+  }
+
+  test("nio file manager: no-overwrite commit onto an existing file fails and keeps its bytes") {
+    val dir = tempDir("graft-cpm")
+    val fm = manager(dir.toString)
+    val p = new Path(dir.toUri.toString, "0")
+    write(fm, p, "first", overwrite = false)
+    intercept[FileAlreadyExistsException](write(fm, p, "second", overwrite = false))
+    assert(read(fm, p) == "first")
+    // overwrite replaces, and neither path leaves a temp file behind
+    write(fm, p, "third", overwrite = true)
+    assert(read(fm, p) == "third")
+    assert(fm.list(new Path(dir.toUri.toString), (_: Path) => true)
+      .map(_.getPath.getName).toSeq == Seq("0"))
+  }
+
+  test("nio file manager: cancel() leaves neither the file nor a temp file") {
+    val dir = tempDir("graft-cpm")
+    val fm = manager(dir.toString)
+    val out = fm.createAtomic(new Path(dir.toUri.toString, "1"), false)
+    out.write("partial".getBytes(UTF_8))
+    out.cancel()
+    assert(Files.list(dir).count() == 0L)
+  }
+
+  test("nio file manager overwrites a file the stock manager wrote, dropping its stale .crc") {
+    val dir = tempDir("graft-cpm")
+    val p = new Path(dir.toUri.toString, "1.delta")
+    val stock = new FileContextBasedCheckpointFileManager(p, spark.sessionState.newHadoopConf())
+    write(stock, p, "stock bytes", overwrite = true)
+    assert(Files.exists(dir.resolve(".1.delta.crc")), "stock manager wrote no .crc sidecar")
+    val fm = manager(dir.toString)
+    write(fm, p, "replayed, longer bytes", overwrite = true)
+    assert(!Files.exists(dir.resolve(".1.delta.crc")))
+    // Spark's FileSystem-based manager verifies a sidecar when one is
+    // present: a stale one would fail this read with a ChecksumException
+    val verifying = new FileSystemBasedCheckpointFileManager(p, spark.sessionState.newHadoopConf())
+    assert(read(verifying, p) == "replayed, longer bytes")
+    assert(read(fm, p) == "replayed, longer bytes")
   }
 }

@@ -148,4 +148,23 @@ class IOSpec extends SparkSuite {
     BatchIO.overwritePartitions(halved, dir, Seq("lang"))
     assert(spark.read.parquet(dir).count() == afterCount)
   }
+
+  test("S6 staging sweep: a dead run's graft_s6_* dirs are deleted, a live run's are kept") {
+    import graft.sources.BatchIO
+    val root = tempDir("graft-stage-root")
+    // above any Linux pid_max (at most 2^22), so never a live process
+    val deadPid = 0x7ffffffeL
+    assert(ProcessHandle.of(deadPid).isEmpty)
+    val livePid = ProcessHandle.current().pid()
+    val dead = root.resolve(s"graft_s6_csv_1a2b_${java.lang.Long.toHexString(deadPid)}")
+    val live = root.resolve(s"graft_s6_orc_1a2b_${java.lang.Long.toHexString(livePid)}")
+    val other = root.resolve(s"graft-other_${java.lang.Long.toHexString(deadPid)}")
+    Seq(dead, live, other).foreach { d =>
+      Files.createDirectories(d.resolve("part"))
+      Files.write(d.resolve("part/x.csv"), "1,2\n".getBytes)
+    }
+    assert(BatchIO.sweepStale(root.toString) == Seq(dead.getFileName.toString))
+    assert(!Files.exists(dead))
+    assert(Files.exists(live.resolve("part/x.csv")) && Files.exists(other.resolve("part/x.csv")))
+  }
 }

@@ -37,8 +37,41 @@ trait SparkSuite extends AnyFunSuite {
   override def withFixture(test: NoArgTest): org.scalatest.Outcome =
     StreamingDigests.currentTest.withValue(
       Some((getClass.getSimpleName, test.name))) {
-      super.withFixture(test)
+      try super.withFixture(test)
+      finally {
+        testDirs.forEach(d => deleteTree(d))
+        testDirs.clear()
+      }
     }
+
+  private val testDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  // a failed delete must not replace the test's own outcome; it shows as
+  // a leftover dir instead
+  private def deleteTree(d: java.nio.file.Path): Unit =
+    try if (java.nio.file.Files.exists(d)) {
+      val w = java.nio.file.Files.walk(d)
+      try w.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally w.close()
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[test] could not delete $d: $e")
+    }
+
+  /** A fresh dir in `java.io.tmpdir`, deleted with its contents when the
+    * current test ends.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    testDirs.add(d)
+    d
+  }
+
+  /** A fresh `graft-cp-<name>*` streaming checkpoint dir, deleted with its
+    * contents when the current test ends.
+    */
+  def tempCheckpoint(name: String): String = tempDir(s"graft-cp-$name").toString
 
   /** All unpartitioned WindowExec nodes in a frame's physical plan —
     * every one is a single-task serialization point, so each occurrence

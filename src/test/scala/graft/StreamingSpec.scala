@@ -60,7 +60,7 @@ class StreamingSpec extends SparkSuite {
     val batchDecoded = publishEvents("t_restart")
     val n = batchDecoded.count()
     assert(n == tables.eventsRaw.count())
-    val cp = Files.createTempDirectory("graft-cp-restart").toString
+    val cp = tempCheckpoint("restart")
     val run1 = runCollecting(stream("t_restart"), cp)
     assert(run1.size == n)
     // publish 3 more; a resumed query (same checkpoint) must see ONLY them
@@ -96,7 +96,7 @@ class StreamingSpec extends SparkSuite {
       .foreachBatch { (b: DataFrame, _: Long) => sizes += b.count(); () }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-cp-ratelimit").toString)
+        tempCheckpoint("ratelimit"))
       .start()
     q.awaitTermination()
     assert(sizes.sum == n, s"all data consumed: $sizes")
@@ -127,7 +127,7 @@ class StreamingSpec extends SparkSuite {
       .foreachBatch { (_: DataFrame, _: Long) => () }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-cp-backpressure").toString)
+        tempCheckpoint("backpressure"))
       .start()
     q.awaitTermination()
     val m = MqAdmission.metricsFrame(spark, topic)
@@ -225,7 +225,7 @@ class StreamingSpec extends SparkSuite {
       .foreachBatch { (_: DataFrame, _: Long) => () }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-cp-drainprop").toString)
+        tempCheckpoint("drainprop"))
       .start()
     q.awaitTermination()
     val ring = MqAdmission.metricsFrame(spark, topic)
@@ -300,7 +300,7 @@ class StreamingSpec extends SparkSuite {
     val t0 = 1706000000000000L
     pub(1, t0); pub(1, t0); pub(2, t0 + 1000000L)
     pub(3, t0 + 3600L * 1000000L) // 1h later: advances watermark past t0
-    val cp = Files.createTempDirectory("graft-cp-dedup").toString
+    val cp = tempCheckpoint("dedup")
     val run1 = runCollecting(Streams.dedupStream(stream(topic)), cp)
     assert(run1.size == 3) // ids 1,2,3 — in-batch duplicate of 1 dropped
     // redelivery of id=1 now arrives BEHIND the committed watermark → dropped
@@ -331,7 +331,7 @@ class StreamingSpec extends SparkSuite {
     pub("late mark advancer text here now", t0 + 3600L * 1000000L)
     val docs = Streams.mqStream(spark, topic)
       .select(col("value").as("text"), col("timestamp").as("ts"))
-    val cp = Files.createTempDirectory("graft-cp-neardedup").toString
+    val cp = tempCheckpoint("neardedup")
     val run1 = runCollecting(Streams.nearDedupStream(docs), cp)
     assert(run1.size == 3, s"got ${run1.size}") // edited collapsed onto base
     assert(run1.map(_.getAs[String]("text")).contains(base))
@@ -353,7 +353,7 @@ class StreamingSpec extends SparkSuite {
     val (first, second) = payloads.splitAt(payloads.length / 2)
     val agg = () => Streams.tumblingCounts(stream(topic), watermark = "100 days") // no late drops
       .select(col("window_start"), col("event_type"), col("n"))
-    val cp = Files.createTempDirectory("graft-cp-aggrestart").toString
+    val cp = tempCheckpoint("aggrestart")
     first.foreach(r => MqBroker.publish(topic, r.getString(1), r.getString(0), 0L))
     val run1 = runCollecting(agg(), cp, OutputMode.Update) // emissions of batch 1
     assert(run1.nonEmpty)
@@ -365,6 +365,66 @@ class StreamingSpec extends SparkSuite {
       .select(col("window_start"), col("event_type"), col("n"))
       .collect().map(r => (r.get(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(last == full)
+  }
+
+  test("T1+T4 a checkpoint begun under Spark's stock file manager resumes under the nio one; the replayed batch overwrites its state deltas") {
+    import java.nio.file.{Path, Paths}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val engineManager = spark.conf.get(key)
+    assert(engineManager == classOf[graft.streaming.LocalCheckpointFileManager].getName)
+    val topic = "t_cpmanager"
+    MqBroker.deleteTopic(topic); MqBroker.createTopic(topic, 2)
+    val payloads = tables.eventsRaw
+      .select(to_json(struct(col("event_id"), expr("ts DIV 1000").as("ts_us"),
+        col("user_id"), col("event_type"), col("value"))).as("v"),
+        col("user_id").cast("string").as("k"))
+      .collect()
+    val (first, second) = payloads.splitAt(payloads.length / 2)
+    val agg = () => Streams.tumblingCounts(stream(topic), watermark = "100 days")
+      .select(col("window_start"), col("event_type"), col("n"))
+    val cp = tempCheckpoint("manager")
+    def files(name: String): Seq[Path] = {
+      val w = Files.walk(Paths.get(cp, "state"))
+      try w.iterator.asScala.filter(_.getFileName.toString == name).toList
+      finally w.close()
+    }
+    def crc(p: Path): Path = p.resolveSibling(s".${p.getFileName}.crc")
+
+    // no trailing no-data batch, so the last batch of a leg is its data batch
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(noData, "false")
+    try {
+      // leg 1, stock manager: batch 0 commits state version 1 with sidecars
+      first.foreach(r => MqBroker.publish(topic, r.getString(1), r.getString(0), 0L))
+      spark.conf.set(key, classOf[FileContextBasedCheckpointFileManager].getName)
+      val run1 = try runCollecting(agg(), cp, OutputMode.Update)
+        finally spark.conf.set(key, engineManager)
+      assert(run1.nonEmpty)
+      val deltas = files("1.delta")
+      assert(deltas.nonEmpty && deltas.forall(d => Files.exists(crc(d))),
+        s"stock manager left no .crc sidecars: $deltas")
+      // batch 0 failed after its state commit: its commit entry is gone
+      // (with its sidecar, as a Hadoop delete removes both)
+      val commit = Paths.get(cp, "commits", "0")
+      Files.delete(commit); Files.deleteIfExists(crc(commit))
+
+      // leg 2, nio manager: batch 0 replays and overwrites every 1.delta
+      val run2 = runCollecting(agg(), cp, OutputMode.Update)
+      assert(run2.map(_.toString).sorted == run1.map(_.toString).sorted)
+      assert(files("1.delta").toSet == deltas.toSet)
+      assert(deltas.forall(d => !Files.exists(crc(d))), "stale .crc sidecar kept")
+
+      // leg 3: new data; state version 1 is read back from the replaced deltas
+      second.foreach(r => MqBroker.publish(topic, r.getString(1), r.getString(0), 0L))
+      val run3 = runCollecting(agg(), cp, OutputMode.Update)
+      val last = (run1 ++ run3).map(r => (r.get(0), r.getString(1)) -> r.getLong(2)).toMap
+      val full = Streams.tumblingCounts(publishEvents_cached(topic), watermark = "100 days")
+        .select(col("window_start"), col("event_type"), col("n"))
+        .collect().map(r => (r.get(0), r.getString(1)) -> r.getLong(2)).toMap
+      assert(last == full)
+    } finally spark.conf.unset(noData)
   }
 
   /** Batch twin over whatever is currently in `topic`. */
@@ -397,7 +457,7 @@ class StreamingSpec extends SparkSuite {
       .outputMode(OutputMode.Append)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-cp-soak").toString)
+        tempCheckpoint("soak"))
       .start()
     q.awaitTermination()
     val stateRows = q.recentProgress.toSeq
@@ -459,7 +519,7 @@ class StreamingSpec extends SparkSuite {
       "type_in_domain" ->
         !col("event_type").isin("view", "click", "purchase", "signup", "error"),
       "value_non_negative" -> (col("value") < 0.0))
-    val cp = Files.createTempDirectory("graft-cp-gate").toString
+    val cp = tempCheckpoint("gate")
     Streams.runWithQualityGate(
       spark.readStream.format(graft.sources.MqSource.format)
         .option("topic", "t_gate_in").load(),
@@ -489,7 +549,7 @@ class StreamingSpec extends SparkSuite {
         col("user_id").cast("string").as("key"),
         to_json(struct(col("event_id"), col("user_id"), col("value"))).as("value"),
         col("ts").as("timestamp"))
-    val cp = Files.createTempDirectory("graft-cp-wb").toString
+    val cp = tempCheckpoint("wb")
     Streams.writeToMq(xform(stream("t_wb_in")), "t_wb_out", cp)
     // read topic B back (batch DSv2 read) and compare against the batch twin
     val got = spark.read.format(graft.sources.MqSource.format).option("topic", "t_wb_out").load()
@@ -523,7 +583,7 @@ class StreamingSpec extends SparkSuite {
         col("user_id").cast("string").as("key"),
         poison(to_json(struct(col("event_id"), col("user_id"), col("value")))).as("value"),
         col("ts").as("timestamp"))
-    val cp = Files.createTempDirectory("graft-cp-fail").toString
+    val cp = tempCheckpoint("fail")
     // the injected mid-partition failure kills one task AFTER it published
     // rows; Spark retries the task (local[N, 2]) and the writer re-publishes
     // the whole partition slice — the documented at-least-once contract
@@ -540,7 +600,7 @@ class StreamingSpec extends SparkSuite {
       .select(col("timestamp").as("ts"),
         get_json_object(col("value"), "$.event_id").cast("long").as("event_id"))
     val deduped = runCollecting(Streams.dedupStream(decoded),
-      Files.createTempDirectory("graft-cp-fail-dd").toString)
+      tempCheckpoint("fail-dd"))
     assert(deduped.size.toLong == expected)
     assert(deduped.map(_.getAs[Long]("event_id")).distinct.size.toLong == expected)
   }
@@ -560,7 +620,7 @@ class StreamingSpec extends SparkSuite {
     (good ++ bad).foreach(v => MqBroker.publish("t_dlq_in", "k", v, 0L))
     Streams.runWithDeadLetter(Streams.mqStream(spark, "t_dlq_in"),
       "t_dlq_out", "t_dlq_dead",
-      Files.createTempDirectory("graft-cp-dlq").toString)
+      tempCheckpoint("dlq"))
     def read(t: String) = spark.read.format(graft.sources.MqSource.format)
       .option("topic", t).load()
     val out = read("t_dlq_out")
@@ -586,7 +646,7 @@ class StreamingSpec extends SparkSuite {
     (good ++ fixable ++ hopeless).foreach(v => MqBroker.publish("t_rp_in", "k", v, 0L))
     Streams.runWithDeadLetter(Streams.mqStream(spark, "t_rp_in"),
       "t_rp_out", "t_rp_dead",
-      Files.createTempDirectory("graft-cp-rp").toString)
+      tempCheckpoint("rp"))
     // fix deployed: strip the envelope and replay — TWICE, simulating a
     // retried replay job (at-least-once republish)
     val fix = (v: org.apache.spark.sql.Column) => regexp_replace(v, "^CORRUPT:", "")
@@ -602,7 +662,7 @@ class StreamingSpec extends SparkSuite {
     // exactly-once end to end, every event id once
     val consumed = runCollecting(
       Streams.dedupStream(Streams.decodeEvents(Streams.mqStream(spark, "t_rp_out"))),
-      Files.createTempDirectory("graft-cp-rp2").toString)
+      tempCheckpoint("rp2"))
     assert(consumed.map(_.getAs[Long]("event_id")).sorted.toSeq == (1L to 5L).toSeq)
   }
 
@@ -751,8 +811,8 @@ class StreamingSpec extends SparkSuite {
   test("streaming CDC apply: versioned snapshot == one-shot compaction; tombstones survive reordering") {
     val topic = "t_cdc"
     publishEvents(topic)
-    val snapDir = Files.createTempDirectory("graft-snap").toString
-    val cp = Files.createTempDirectory("graft-cp-cdc").toString
+    val snapDir = tempDir("graft-snap").toString
+    val cp = tempCheckpoint("cdc")
     val del = col("event_type") === "error"
     def applyNow(): Unit = Streams.applyChangesStream(stream(topic), snapDir, cp,
       keys = Seq("user_id"), versionCols = Seq("ts", "event_id"), isDelete = del)
@@ -788,8 +848,8 @@ class StreamingSpec extends SparkSuite {
   test("T9 torn-commit soak: crash between version write and pointer flip never surfaces to readers; replay converges") {
     val topic = "t_cdc_torn"
     publishEvents(topic)
-    val snapDir = Files.createTempDirectory("graft-snap-torn").toString
-    val cp = Files.createTempDirectory("graft-cp-torn").toString
+    val snapDir = tempDir("graft-snap-torn").toString
+    val cp = tempCheckpoint("torn")
     val del = col("event_type") === "error"
     def applyNow(hook: Long => Unit = _ => ()): Unit =
       Streams.applyChangesStream(stream(topic), snapDir, cp,
@@ -841,8 +901,8 @@ class StreamingSpec extends SparkSuite {
   test("incremental aggregate view: merge-with-snapshot == re-aggregating the full topic") {
     val topic = "t_aggview"
     publishEvents(topic)
-    val snapDir = Files.createTempDirectory("graft-aggview").toString
-    val cp = Files.createTempDirectory("graft-cp-aggview").toString
+    val snapDir = tempDir("graft-aggview").toString
+    val cp = tempCheckpoint("aggview")
     // count/sum/max merge by re-aggregation; distinct-count merges as a
     // datasketches HLL union — the sketch IS the mergeable state, which
     // is how a distinct ever gets maintained incrementally (the
@@ -911,7 +971,7 @@ class StreamingSpec extends SparkSuite {
         .select(col("doc_id").cast("string").as("key"),
           to_json(struct(col("doc_id"), col("content_sha"), col("lang"))).as("value"))
     }
-    val cp = Files.createTempDirectory("graft-cp-pipe").toString
+    val cp = tempCheckpoint("pipe")
     Streams.writeToMq(
       pipeline(Streams.mqStream(spark, in)), out, cp)
     val curated = spark.read.format(graft.sources.MqSource.format).option("topic", out).load()
@@ -937,9 +997,9 @@ class StreamingSpec extends SparkSuite {
           col("n_chars"))).as("v"))
       .collect().foreach(r => MqBroker.publish(topic, r.getString(0), r.getString(1), 0L))
     publish(docsFixture)
-    val store = Files.createTempDirectory("graft-l0-store").toString
-    val manifest = Files.createTempDirectory("graft-l0-manifest").toString
-    val cp = Files.createTempDirectory("graft-l0-cp").toString
+    val store = tempDir("graft-l0-store").toString
+    val manifest = tempDir("graft-l0-manifest").toString
+    val cp = tempDir("graft-l0-cp").toString
     val schema = StructType.fromDDL(
       "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
     def decoded = Streams.mqStream(spark, topic)
@@ -966,7 +1026,7 @@ class StreamingSpec extends SparkSuite {
 
   test("T8 file-source stream reproduces the declared tumbling_window answer") {
     // file source needs a directory; replay the fixture from a tmp dir
-    val dir = Files.createTempDirectory("graft-events-stream")
+    val dir = tempDir("graft-events-stream")
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
     val raw = spark.read.parquet(s"$sf/events.parquet")
@@ -994,7 +1054,7 @@ class StreamingSpec extends SparkSuite {
     // runs unchanged on a stream — the in-flight curation gate needs no
     // streaming-specific twin. Replay the documents fixture as a file
     // stream and compare against the batch ruleset row for row.
-    val dir = Files.createTempDirectory("graft-docs-stream")
+    val dir = tempDir("graft-docs-stream")
     Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"))
     val batchDocs = spark.read.parquet(s"$sf/documents.parquet")
@@ -1011,7 +1071,7 @@ class StreamingSpec extends SparkSuite {
     val ref = Eval.referenceCounts(docs)
     // two micro-batches: a clean half and a half with an injected
     // out-of-vocabulary document
-    val dir = Files.createTempDirectory("graft-drift-stream")
+    val dir = tempDir("graft-drift-stream")
     val half1 = docs.filter(col("doc_id") < 250)
     val half2 = docs.filter(col("doc_id") >= 250)
       .unionByName(half1.limit(1).select(col("doc_id") + 100000,
@@ -1023,7 +1083,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     Streams.runDriftMonitor(stream, ref,
-      Files.createTempDirectory("graft-drift-cp").toString) { (_, r) =>
+      tempDir("graft-drift-cp").toString) { (_, r) =>
       got += ((r.getAs[Long]("n_tokens"), r.getAs[Long]("oov_permille"),
         r.getAs[Long]("kl_micro")))
     }
@@ -1046,7 +1106,7 @@ class StreamingSpec extends SparkSuite {
       val small = assets.filter(col("doc_id") < 80L)
       val w1 = small.filter(col("doc_id") < 40L)
       val w2 = small.filter(col("doc_id") >= 40L)
-      val dir = Files.createTempDirectory(s"graft-$name-waves")
+      val dir = tempDir(s"graft-$name-waves")
       w1.coalesce(1).write.parquet(s"$dir/w1")
       w2.coalesce(1).write.parquet(s"$dir/w2")
       val stream = spark.readStream.schema(small.schema)
@@ -1060,7 +1120,7 @@ class StreamingSpec extends SparkSuite {
     val (aviStream, av1, av2) = waves(Multimodal.synthAviAssets(tables), "avi")
     val aviGot = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
     Streams.runMediaDecode(aviStream,
-      Files.createTempDirectory("graft-avi-cp").toString,
+      tempDir("graft-avi-cp").toString,
       df => Multimodal.videoFrameStats(df, stride = 2)) { (_, rows) =>
       aviGot += rows.map(rowKey).toSet
     }
@@ -1073,7 +1133,7 @@ class StreamingSpec extends SparkSuite {
     val (gifStream, gf1, gf2) = waves(Multimodal.synthAnimGifAssets(tables), "gifanim")
     val gifGot = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
     Streams.runMediaDecode(gifStream,
-      Files.createTempDirectory("graft-gifanim-cp").toString,
+      tempDir("graft-gifanim-cp").toString,
       df => Multimodal.gifFrameStats(df, stride = 2)) { (_, rows) =>
       gifGot += rows.map(rowKey).toSet
     }
@@ -1084,7 +1144,7 @@ class StreamingSpec extends SparkSuite {
     val (mpgStream, mp1, mp2) = waves(Multimodal.synthMpeg1Assets(tables), "mpeg1")
     val mpgGot = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
     Streams.runMediaDecode(mpgStream,
-      Files.createTempDirectory("graft-mpeg1-cp").toString,
+      tempDir("graft-mpeg1-cp").toString,
       df => Multimodal.mpeg1FrameStats(df, stride = 2)) { (_, rows) =>
       mpgGot += rows.map(rowKey).toSet
     }
@@ -1098,7 +1158,7 @@ class StreamingSpec extends SparkSuite {
     val (rleStream, rl1, rl2) = waves(Multimodal.synthRle8Assets(tables), "rle8")
     val rleGot = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
     Streams.runMediaDecode(rleStream,
-      Files.createTempDirectory("graft-rle8-cp").toString,
+      tempDir("graft-rle8-cp").toString,
       df => Multimodal.rle8FrameStats(df)) { (_, rows) =>
       rleGot += rows.map(rowKey).toSet
     }
@@ -1109,7 +1169,7 @@ class StreamingSpec extends SparkSuite {
     val (gzStream, gz1, gz2) = waves(Multimodal.synthGzipAssets(tables), "gzip")
     val gzGot = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
     Streams.runMediaDecode(gzStream,
-      Files.createTempDirectory("graft-gzip-cp").toString,
+      tempDir("graft-gzip-cp").toString,
       df => Multimodal.gzipTextStats(df)) { (_, rows) =>
       gzGot += rows.map(rowKey).toSet
     }
@@ -1129,7 +1189,7 @@ class StreamingSpec extends SparkSuite {
     // two arrival waves splitting the train stream mid-corpus
     val w1 = train.filter(col("doc_id") < 250L)
     val w2 = train.filter(col("doc_id") >= 250L)
-    val dir = Files.createTempDirectory("graft-decontam-waves")
+    val dir = tempDir("graft-decontam-waves")
     w1.coalesce(1).write.parquet(s"$dir/w1")
     w2.coalesce(1).write.parquet(s"$dir/w2")
     val stream = spark.readStream.schema(train.schema)
@@ -1137,7 +1197,7 @@ class StreamingSpec extends SparkSuite {
     val got = scala.collection.mutable.Map.empty[Long, (Boolean, Boolean)]
     var waves = 0
     Streams.runDecontamGate(stream, bench,
-      Files.createTempDirectory("graft-decontam-cp").toString) { (_, flagged) =>
+      tempDir("graft-decontam-cp").toString) { (_, flagged) =>
       waves += 1
       flagged.collect().foreach { r =>
         got(r.getAs[Long]("doc_id")) =
@@ -1165,14 +1225,14 @@ class StreamingSpec extends SparkSuite {
     // label's vectors only) to exercise the low-entropy alarm path
     val w1 = emb.filter(col("vec_id") < 250L)
     val w2 = emb.filter(col("vec_id") >= 250L && col("label") === 3)
-    val dir = Files.createTempDirectory("graft-div-waves")
+    val dir = tempDir("graft-div-waves")
     w1.coalesce(1).write.parquet(s"$dir/w1")
     w2.coalesce(1).write.parquet(s"$dir/w2")
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
     Streams.runDiversityMonitor(stream, cents,
-      Files.createTempDirectory("graft-div-cp").toString) { (_, rows) =>
+      tempDir("graft-div-cp").toString) { (_, rows) =>
       got += rows.map(_.toString).toSeq
     }
     assert(got.size == 2, s"expected 2 micro-batches, got ${got.size}")
@@ -1199,14 +1259,14 @@ class StreamingSpec extends SparkSuite {
     val w2 = docs.filter(col("split") === "train" && col("doc_id") % 7 === 0)
       .select("source", "text")
       .unionByName(bench.select(lit("evalscrape").as("source"), col("text")))
-    val dir = Files.createTempDirectory("graft-srcoverlap-waves")
+    val dir = tempDir("graft-srcoverlap-waves")
     w1.coalesce(1).write.parquet(s"$dir/w1")
     w2.coalesce(1).write.parquet(s"$dir/w2")
     val stream = spark.readStream.schema(w1.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[org.apache.spark.sql.Row]]
     Streams.runSourceOverlapMonitor(stream, benchSketch,
-      Files.createTempDirectory("graft-srcoverlap-cp").toString) { (_, rows) =>
+      tempDir("graft-srcoverlap-cp").toString) { (_, rows) =>
       got += rows
     }
     assert(got.size == 2, s"expected 2 micro-batches, got ${got.size}")
@@ -1237,14 +1297,14 @@ class StreamingSpec extends SparkSuite {
     // so its containment estimate must saturate vs wave 1's baseline
     val w1 = docs.filter(col("split") === "train").select("text")
     val w2 = bench
-    val dir = Files.createTempDirectory("graft-overlap-waves")
+    val dir = tempDir("graft-overlap-waves")
     w1.coalesce(1).write.parquet(s"$dir/w1")
     w2.coalesce(1).write.parquet(s"$dir/w2")
     val stream = spark.readStream.schema(w1.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     val got = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     Streams.runOverlapMonitor(stream, benchSketch,
-      Files.createTempDirectory("graft-overlap-cp").toString) { (_, row) =>
+      tempDir("graft-overlap-cp").toString) { (_, row) =>
       got += row
     }
     assert(got.size == 2, s"expected 2 micro-batches, got ${got.size}")
@@ -1263,13 +1323,13 @@ class StreamingSpec extends SparkSuite {
 
   test("T13 ANN serving: streamed query waves against the persisted PQ index == batch probe") {
     import graft.operators.Similarity
-    val idxDir = Files.createTempDirectory("graft-pq-serve").toString
+    val idxDir = tempDir("graft-pq-serve").toString
     val emb = tables.embeddings
     Similarity.buildPqIndex(emb, idxDir)
     val queries = Similarity.batchQueryVecs(tables, Similarity.BatchQueryIds)
     // two arrival waves: the serving answer must not depend on how the
     // query stream is batched
-    val dir = Files.createTempDirectory("graft-ann-queries")
+    val dir = tempDir("graft-ann-queries")
     queries.filter(col("query_id") < 42L).coalesce(1).write.parquet(s"$dir/w1")
     queries.filter(col("query_id") === 42L).coalesce(1).write.parquet(s"$dir/w2")
     val stream = spark.readStream.schema(queries.schema)
@@ -1277,7 +1337,7 @@ class StreamingSpec extends SparkSuite {
     val got = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     var batches = 0
     Streams.runAnnServe(stream, idxDir, 10, emb,
-      Files.createTempDirectory("graft-ann-cp").toString) { (_, ans) =>
+      tempDir("graft-ann-cp").toString) { (_, ans) =>
       got ++= ans.collect(); batches += 1
     }
     assert(batches == 2, s"expected 2 micro-batches, got $batches")
@@ -1289,17 +1349,17 @@ class StreamingSpec extends SparkSuite {
 
   test("T13 ANN serve cap: an oversized query micro-batch fails loudly instead of collecting to the driver") {
     import graft.operators.Similarity
-    val idxDir = Files.createTempDirectory("graft-pq-serve-cap").toString
+    val idxDir = tempDir("graft-pq-serve-cap").toString
     val emb = tables.embeddings
     Similarity.buildPqIndex(emb, idxDir)
     val queries = Similarity.batchQueryVecs(tables, Similarity.BatchQueryIds)
     assert(queries.count() > 2) // the test cap must actually be exceeded
-    val dir = Files.createTempDirectory("graft-ann-cap-queries")
+    val dir = tempDir("graft-ann-cap-queries")
     queries.coalesce(1).write.parquet(s"$dir/w1")
     val stream = spark.readStream.schema(queries.schema).parquet(s"$dir/*/")
     val crash = intercept[Exception] {
       Streams.runAnnServe(stream, idxDir, 10, emb,
-        Files.createTempDirectory("graft-ann-cap-cp").toString,
+        tempDir("graft-ann-cap-cp").toString,
         maxQueriesPerBatch = 2) { (_, _) => () }
     }
     def msgs(t: Throwable): Seq[String] =
@@ -1320,7 +1380,7 @@ class StreamingSpec extends SparkSuite {
     assertSameRows(self, declared)
     // streamed in two waves (one with an injected wholly-OOV doc): each
     // batch's annotation == the batch twin; the OOV doc floors and scores NULL
-    val dir = Files.createTempDirectory("graft-imp-stream")
+    val dir = tempDir("graft-imp-stream")
     val half1 = docs.filter(col("doc_id") < 250)
     val oovId = 990000L
     val half2 = docs.filter(col("doc_id") >= 250)
@@ -1333,7 +1393,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[org.apache.spark.sql.Row])]
     Streams.runImportanceGate(stream, nllRef, bounds,
-      Files.createTempDirectory("graft-imp-cp").toString) { (id, ann) =>
+      tempDir("graft-imp-cp").toString) { (id, ann) =>
       got += ((id, ann.collect().toSeq))
     }
     assert(got.size == 2)
@@ -1355,7 +1415,7 @@ class StreamingSpec extends SparkSuite {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val model = TextOps.nbTrain(docs, col("source").isin(TextOps.NbRefSources: _*))
     // two waves, the second with an injected wholly-OOV doc
-    val dir = Files.createTempDirectory("graft-nb-stream")
+    val dir = tempDir("graft-nb-stream")
     val half1 = docs.filter(col("doc_id") < 250)
     val oovId = 991000L
     val half2 = docs.filter(col("doc_id") >= 250)
@@ -1368,7 +1428,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[org.apache.spark.sql.Row])]
     Streams.runNbQualityGate(stream, model,
-      Files.createTempDirectory("graft-nb-cp").toString) { (id, scored) =>
+      tempDir("graft-nb-cp").toString) { (id, scored) =>
       got += ((id, scored.collect().toSeq))
     }
     assert(got.size == 2)
@@ -1386,16 +1446,16 @@ class StreamingSpec extends SparkSuite {
   test("T14 PQ ingest: streamed vector waves build a segmented index == flat-index probe") {
     import graft.operators.Similarity
     val emb = tables.embeddings
-    val idxDir = Files.createTempDirectory("graft-pq-ingest").toString
+    val idxDir = tempDir("graft-pq-ingest").toString
     // offline build = the static codebooks + the flat reference codes
     Similarity.buildPqIndex(emb, idxDir)
     // the same vectors arrive as two waves; each must become a segment
-    val dir = Files.createTempDirectory("graft-pq-vecs")
+    val dir = tempDir("graft-pq-vecs")
     emb.filter(col("vec_id") % 2 === 0).coalesce(1).write.parquet(s"$dir/w1")
     emb.filter(col("vec_id") % 2 === 1).coalesce(1).write.parquet(s"$dir/w2")
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
-    val cp = Files.createTempDirectory("graft-pq-ingest-cp").toString
+    val cp = tempDir("graft-pq-ingest-cp").toString
     Streams.runPqIngest(stream, idxDir, cp)
     // committed manifest lists both segments; the segmented probe equals
     // the flat probe over the same vectors for every query
@@ -1445,10 +1505,10 @@ class StreamingSpec extends SparkSuite {
   test("T14 torn-commit soak: ingest crash before pointer flip leaves readers on the pre-crash segment set; replay converges") {
     import graft.operators.Similarity
     val emb = tables.embeddings
-    val idxDir = Files.createTempDirectory("graft-pq-torn").toString
+    val idxDir = tempDir("graft-pq-torn").toString
     Similarity.buildPqIndex(emb, idxDir)
-    val dir = Files.createTempDirectory("graft-pq-torn-vecs")
-    val cp = Files.createTempDirectory("graft-pq-torn-cp").toString
+    val dir = tempDir("graft-pq-torn-vecs")
+    val cp = tempDir("graft-pq-torn-cp").toString
     def stream() = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     def pointer(): String = java.nio.file.Files
@@ -1491,10 +1551,10 @@ class StreamingSpec extends SparkSuite {
   test("T14 replay-after-compaction: a committed-but-uncheckpointed batch absorbed by compaction replays as a no-op") {
     import graft.operators.Similarity
     val emb = tables.embeddings
-    val idxDir = Files.createTempDirectory("graft-pq-replay").toString
+    val idxDir = tempDir("graft-pq-replay").toString
     Similarity.buildPqIndex(emb, idxDir)
-    val dir = Files.createTempDirectory("graft-pq-replay-vecs")
-    val cp = Files.createTempDirectory("graft-pq-replay-cp").toString
+    val dir = tempDir("graft-pq-replay-vecs")
+    val cp = tempDir("graft-pq-replay-cp").toString
     def stream() = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     val queries = Similarity.batchQueryVecs(tables, Similarity.BatchQueryIds)
@@ -1532,10 +1592,10 @@ class StreamingSpec extends SparkSuite {
   test("T14 size-tiered merge: same-tier segments merge, covered ids inherited, probe invariant across a racing ingest") {
     import graft.operators.Similarity
     val emb = tables.embeddings
-    val idxDir = Files.createTempDirectory("graft-pq-merge").toString
+    val idxDir = tempDir("graft-pq-merge").toString
     Similarity.buildPqIndex(emb, idxDir)
-    val dir = Files.createTempDirectory("graft-pq-merge-vecs")
-    val cp = Files.createTempDirectory("graft-pq-merge-cp").toString
+    val dir = tempDir("graft-pq-merge-vecs")
+    val cp = tempDir("graft-pq-merge-cp").toString
     def stream() = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     val queries = Similarity.batchQueryVecs(tables, Similarity.BatchQueryIds)
@@ -1596,12 +1656,12 @@ class StreamingSpec extends SparkSuite {
     import TestSpark.spark.implicits._
     import graft.operators.Similarity
     val emb = tables.embeddings
-    val idxDir = Files.createTempDirectory("graft-pq-del").toString
+    val idxDir = tempDir("graft-pq-del").toString
     Similarity.buildPqIndex(emb, idxDir)
-    val dir = Files.createTempDirectory("graft-pq-del-vecs")
-    val cp = Files.createTempDirectory("graft-pq-del-cp").toString
-    val delDir = Files.createTempDirectory("graft-pq-del-ids")
-    val cpDel = Files.createTempDirectory("graft-pq-del-idcp").toString
+    val dir = tempDir("graft-pq-del-vecs")
+    val cp = tempDir("graft-pq-del-cp").toString
+    val delDir = tempDir("graft-pq-del-ids")
+    val cpDel = tempDir("graft-pq-del-idcp").toString
     val queries = Similarity.batchQueryVecs(tables, Similarity.BatchQueryIds)
     val books = spark.read.parquet(s"$idxDir/codebooks")
     def manifestRows() = {
@@ -1678,12 +1738,12 @@ class StreamingSpec extends SparkSuite {
   test("T14b delete torn-commit soak: crash seams converge; absorbed delete replays as a no-op past a re-ingested id") {
     import graft.operators.Similarity
     val emb = tables.embeddings
-    val idxDir = Files.createTempDirectory("graft-pq-dtorn").toString
+    val idxDir = tempDir("graft-pq-dtorn").toString
     Similarity.buildPqIndex(emb, idxDir)
-    val dir = Files.createTempDirectory("graft-pq-dtorn-vecs")
-    val cp = Files.createTempDirectory("graft-pq-dtorn-cp").toString
-    val delDir = Files.createTempDirectory("graft-pq-dtorn-ids")
-    val cpDel = Files.createTempDirectory("graft-pq-dtorn-idcp").toString
+    val dir = tempDir("graft-pq-dtorn-vecs")
+    val cp = tempDir("graft-pq-dtorn-cp").toString
+    val delDir = tempDir("graft-pq-dtorn-ids")
+    val cpDel = tempDir("graft-pq-dtorn-idcp").toString
     val queries = Similarity.batchQueryVecs(tables, Similarity.BatchQueryIds)
     def pointer(): String = java.nio.file.Files
       .readString(java.nio.file.Paths.get(s"$idxDir/manifest/LATEST")).trim
@@ -1775,8 +1835,8 @@ class StreamingSpec extends SparkSuite {
     val rate = Streams.rateStream(spark, 10)
     assert(rate.isStreaming && rate.columns.sameElements(Array("timestamp", "value")))
     publishEvents("t_sink")
-    val out = Files.createTempDirectory("graft-sink").toString
-    val cp = Files.createTempDirectory("graft-sink-cp").toString
+    val out = tempDir("graft-sink").toString
+    val cp = tempDir("graft-sink-cp").toString
     Streams.foreachBatchParquet(stream("t_sink"), out, cp)
     val written = spark.read.parquet(s"$out/batch_*")
     assert(written.count() == tables.eventsRaw.count())
@@ -1790,15 +1850,15 @@ class StreamingSpec extends SparkSuite {
     val cents = Similarity.trainedCentroids(emb, nCells)
     // waves split by id range: ids nondecreasing across arrival — the
     // equivalence contract's precondition (the MQ-offset discipline)
-    val dir = Files.createTempDirectory("graft-semdedup-waves")
+    val dir = tempDir("graft-semdedup-waves")
     val cut1 = n / 3; val cut2 = 2 * n / 3
     emb.filter(col("vec_id") < cut1).coalesce(1).write.parquet(s"$dir/w1")
     emb.filter(col("vec_id") >= cut1 && col("vec_id") < cut2)
       .coalesce(1).write.parquet(s"$dir/w2")
     emb.filter(col("vec_id") >= cut2).coalesce(1).write.parquet(s"$dir/w3")
     def run(): Seq[(Long, Long, Boolean)] = {
-      val store = Files.createTempDirectory("graft-semdedup-store").toString
-      val cp = Files.createTempDirectory("graft-semdedup-cp").toString
+      val store = tempDir("graft-semdedup-store").toString
+      val cp = tempDir("graft-semdedup-cp").toString
       val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Boolean)]
       Streams.runSemanticDedupStream(
         spark.readStream.schema(emb.schema)
@@ -1831,15 +1891,15 @@ class StreamingSpec extends SparkSuite {
     import graft.operators.Dedup
     val docs = tables.documents.select(col("doc_id"), col("text"))
     val n = docs.count()
-    val dir = Files.createTempDirectory("graft-substr-waves")
+    val dir = tempDir("graft-substr-waves")
     val cut1 = n / 3; val cut2 = 2 * n / 3
     docs.filter(col("doc_id") < cut1).coalesce(1).write.parquet(s"$dir/w1")
     docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2)
       .coalesce(1).write.parquet(s"$dir/w2")
     docs.filter(col("doc_id") >= cut2).coalesce(1).write.parquet(s"$dir/w3")
     def run(): Seq[(Long, Long, Long, String)] = {
-      val store = Files.createTempDirectory("graft-substr-store").toString
-      val cp = Files.createTempDirectory("graft-substr-cp").toString
+      val store = tempDir("graft-substr-store").toString
+      val cp = tempDir("graft-substr-cp").toString
       val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, String)]
       Streams.runSubstrDedupStream(
         spark.readStream.schema(docs.schema)
@@ -1864,11 +1924,11 @@ class StreamingSpec extends SparkSuite {
     import graft.operators.Dedup
     val docs = tables.documents.select(col("doc_id"), col("text"))
     val n = docs.count()
-    val dir = Files.createTempDirectory("graft-substr-soak")
+    val dir = tempDir("graft-substr-soak")
     docs.filter(col("doc_id") < n / 2).coalesce(1).write.parquet(s"$dir/w1")
     docs.filter(col("doc_id") >= n / 2).coalesce(1).write.parquet(s"$dir/w2")
-    val store = Files.createTempDirectory("graft-substr-soak-store").toString
-    val cp = Files.createTempDirectory("graft-substr-soak-cp").toString
+    val store = tempDir("graft-substr-soak-store").toString
+    val cp = tempDir("graft-substr-soak-cp").toString
     def stream() = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, String)]
@@ -1893,13 +1953,13 @@ class StreamingSpec extends SparkSuite {
     import graft.operators.Dedup
     val docs = tables.documents.select(col("doc_id"), col("text"))
     val n = docs.count()
-    val dir = Files.createTempDirectory("graft-substr-ooo")
+    val dir = tempDir("graft-substr-ooo")
     // w1 carries the HIGH ids, w2 the low — the source delivers w1 first,
     // so wave 2 violates the nondecreasing-doc_id contract
     docs.filter(col("doc_id") >= n / 2).coalesce(1).write.parquet(s"$dir/w1")
     docs.filter(col("doc_id") < n / 2).coalesce(1).write.parquet(s"$dir/w2")
-    val store = Files.createTempDirectory("graft-substr-ooo-store").toString
-    val cp = Files.createTempDirectory("graft-substr-ooo-cp").toString
+    val store = tempDir("graft-substr-ooo-store").toString
+    val cp = tempDir("graft-substr-ooo-cp").toString
     val boom = intercept[Exception] {
       Streams.runSubstrDedupStream(
         spark.readStream.schema(docs.schema)
@@ -1922,11 +1982,11 @@ class StreamingSpec extends SparkSuite {
     val w1 = Seq((1L, "tiny doc"), (2L, "also small")).toDF("doc_id", "text")
     val all = w1.unionByName(tables.documents
       .select(col("doc_id") + 100L as "doc_id", col("text")).limit(20))
-    val dir = Files.createTempDirectory("graft-substr-shortwave")
+    val dir = tempDir("graft-substr-shortwave")
     w1.coalesce(1).write.parquet(s"$dir/w1")
     all.filter(col("doc_id") >= 100L).coalesce(1).write.parquet(s"$dir/w2")
-    val store = Files.createTempDirectory("graft-substr-shortwave-store").toString
-    val cp = Files.createTempDirectory("graft-substr-shortwave-cp").toString
+    val store = tempDir("graft-substr-shortwave-store").toString
+    val cp = tempDir("graft-substr-shortwave-cp").toString
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, String)]
     Streams.runSubstrDedupStream(
       spark.readStream.schema(w1.schema)
@@ -1953,8 +2013,8 @@ class StreamingSpec extends SparkSuite {
     val w2 = Seq((3L, "x y z"), (4L, "f g h")).toDF("doc_id", "text")
     def run(nGram: Int, dirs: (String, String)) = {
       val (dir, tag) = dirs
-      val store = Files.createTempDirectory(s"graft-substrconv-$tag-store").toString
-      val cp = Files.createTempDirectory(s"graft-substrconv-$tag-cp").toString
+      val store = tempDir(s"graft-substrconv-$tag-store").toString
+      val cp = tempDir(s"graft-substrconv-$tag-cp").toString
       val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, String)]
       val rounds = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
       Streams.runSubstrDedupConvergedStream(
@@ -1969,7 +2029,7 @@ class StreamingSpec extends SparkSuite {
       }
       (got.toSeq, rounds.toSeq)
     }
-    val dir = Files.createTempDirectory("graft-substrconv-hand")
+    val dir = tempDir("graft-substrconv-hand")
     w1.coalesce(1).write.parquet(s"$dir/w1")
     w2.coalesce(1).write.parquet(s"$dir/w2")
     val (got, rounds) = run(3, (dir.toString, "hand"))
@@ -1985,7 +2045,7 @@ class StreamingSpec extends SparkSuite {
     // wave-local here)
     val docs = tables.documents.select(col("doc_id"), col("text"))
     val cnt = docs.count()
-    val fdir = Files.createTempDirectory("graft-substrconv-fix")
+    val fdir = tempDir("graft-substrconv-fix")
     docs.filter(col("doc_id") < cnt / 2).coalesce(1).write.parquet(s"$fdir/w1")
     docs.filter(col("doc_id") >= cnt / 2).coalesce(1).write.parquet(s"$fdir/w2")
     val (fgot, _) = run(Dedup.DupSpanN, (fdir.toString, "fix"))
@@ -1999,11 +2059,11 @@ class StreamingSpec extends SparkSuite {
     import graft.operators.Dedup
     val docs = tables.documents.select(col("doc_id"), col("text"))
     val n = docs.count()
-    val dir = Files.createTempDirectory("graft-substrconv-soak")
+    val dir = tempDir("graft-substrconv-soak")
     docs.filter(col("doc_id") < n / 2).coalesce(1).write.parquet(s"$dir/w1")
     docs.filter(col("doc_id") >= n / 2).coalesce(1).write.parquet(s"$dir/w2")
-    val store = Files.createTempDirectory("graft-substrconv-soak-store").toString
-    val cp = Files.createTempDirectory("graft-substrconv-soak-cp").toString
+    val store = tempDir("graft-substrconv-soak-store").toString
+    val cp = tempDir("graft-substrconv-soak-cp").toString
     def stream() = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, String)]
@@ -2029,11 +2089,11 @@ class StreamingSpec extends SparkSuite {
     val emb = tables.embeddings
     val n = emb.count()
     val cents = Similarity.trainedCentroids(emb, Similarity.semCellsFor(n))
-    val dir = Files.createTempDirectory("graft-semdedup-soak")
+    val dir = tempDir("graft-semdedup-soak")
     emb.filter(col("vec_id") < n / 2).coalesce(1).write.parquet(s"$dir/w1")
     emb.filter(col("vec_id") >= n / 2).coalesce(1).write.parquet(s"$dir/w2")
-    val store = Files.createTempDirectory("graft-semdedup-soak-store").toString
-    val cp = Files.createTempDirectory("graft-semdedup-soak-cp").toString
+    val store = tempDir("graft-semdedup-soak-store").toString
+    val cp = tempDir("graft-semdedup-soak-cp").toString
     def stream() = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/*/")
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Boolean)]
