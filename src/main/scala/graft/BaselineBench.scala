@@ -69,11 +69,8 @@ object BaselineBench {
         .agg(count(lit(1)).as("n"), avg("value").as("avg_value"))
         .orderBy(col("window").getField("start"), col("event_type"))))
     val rows = for ((name, q) <- queries) yield {
-      q().write.format("noop").mode("overwrite").save() // warm
-      def best(act: DataFrame => Unit) = (1 to 3).map { _ =>
-        val t = System.nanoTime(); act(q()); (System.nanoTime() - t) / 1e9 }.min
-      val c = best(df => { df.count(); () })
-      val n = best(_.write.format("noop").mode("overwrite").save())
+      val c = Bench.warmBest("baseline", name)(q().count())
+      val n = Bench.warmBest("baseline", name)(q().write.format("noop").mode("overwrite").save())
       println(f"$name%-22s count=$c%.3f noop=$n%.3f")
       (name, c, n)
     }
@@ -130,12 +127,7 @@ object TailTwins {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try runAll(spark, dir, keep) finally spark.stop()
-  }
-
-  private def runAll(spark: SparkSession, dir: String,
-                     keep: String => Boolean): Seq[(String, Double)] = {
-    measure(twinDefs(spark, dir), keep, dir)
+    try measure(twinDefs(spark, dir), keep, dir) finally spark.stop()
   }
 
   /** One twin's frame, lazily — lets specs pin a twin's ANSWER against
@@ -1432,34 +1424,13 @@ object TailTwins {
     val only = sys.env.get("SPARK_GRAFT_BASELINE_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
     val picked = twins.filter { case (n, _) => only.forall(_.contains(n)) && keep(n) }
-    // warm best-of-3 by default — the SAME basis as the engine side of
-    // TWINS.json. Rounds 7–9 measured twins single-shot (JIT included),
-    // which is asymmetric: on sub-second queries the jitter flipped
-    // ratios ±30% between runs, manufacturing phantom >1.0 rows.
-    // SPARK_GRAFT_TWINS_SINGLESHOT restores the old basis for
-    // longitudinal comparison against the earlier artifacts.
-    val singleShot = sys.env.contains("SPARK_GRAFT_TWINS_SINGLESHOT")
+    // warm best-of-3 — the SAME basis as the engine side of TWINS.json
     val results = picked.map { case (name, q) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        q().write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val r = try {
-        if (singleShot) once()
-        else { once(); (1 to 3).map(_ => once()).min }
-      } catch { case e: Throwable =>
-        System.err.println(s"[tail-twin] $name failed: ${e.getMessage}"); -1.0
-      }
+      val r = Bench.warmBest("tail-twin", name)(q().write.format("noop").mode("overwrite").save())
       println(f"tail_twin $name%-18s noop=$r%.3f")
       name -> r
     }
-    // Locale.ROOT: the f"" interpolator is locale-sensitive and a
-    // comma-decimal JVM locale would emit invalid JSON (same fix as
-    // Bench.fmt); the human-readable per-line prints above stay f""
-    println(results.map { case (k, v) =>
-        "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)) }
-      .mkString("{\"vanilla_tail\":{", ",", s"""},"sf":"$dir"}"""))
+    println(s"""{"vanilla_tail":${Bench.toJson(results)},"sf":"$dir"}""")
     results
   }
 }
@@ -1473,9 +1444,8 @@ object TailTwins {
   *
   * Both sides measure warm best-of-3 noop-sink (symmetric as of round
   * 10 — the single-shot twin basis of rounds 7–9 included first-run JIT
-  * on one side only, which flipped sub-second ratios ±30% between runs;
-  * SPARK_GRAFT_TWINS_SINGLESHOT restores the old basis for comparison
-  * against the earlier artifacts). The MLlib
+  * on one side only, which flipped sub-second ratios ±30% between runs).
+  * The MLlib
   * `approxSimilarityJoin` twin family is quadratic-explosion-bound on
   * the dense fixture (killed after 20 min at sf0.1 in round 7), so
   * those pairs measure at sf0.01 where the twin completes — recorded
@@ -1497,24 +1467,15 @@ object Twins {
     // SAME sf as its twin
     val spark = Engine.session("graft-twins")
     val qs = SparkEntry.queries
-    def engineBest(name: String, dir: String): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        qs(name)(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      try { once(); (1 to 3).map(_ => once()).min }
-      catch { case e: Throwable =>
-        System.err.println(s"[twins] engine $name failed: ${e.getMessage}"); -1.0 }
-    }
     val pairs = (twinBig ++ twinSmall).map { case (name, twinS) =>
-      val engineS = if (qs.contains(name)) engineBest(name, sfOf(name)) else -1.0
+      val engineS = if (!qs.contains(name)) -1.0
+        else Bench.warmBest("twins", s"engine $name")(
+          qs(name)(spark, sfOf(name)).write.format("noop").mode("overwrite").save())
       println(f"twin_ratio $name%-18s twin=$twinS%.3f engine=$engineS%.3f")
       (name, twinS, engineS)
     }
     spark.stop()
-    def fmt(v: Double) =
-      if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import Bench.fmt
     val entries = pairs.sortBy(_._1).map { case (name, t, e) =>
       val ratio = if (t > 0 && e >= 0) e / t else -1.0
       s""""$name":{"twin_s":${fmt(t)},"engine_s":${fmt(e)},"ratio":${fmt(ratio)},"sf":"${sfOf(name)}"}"""

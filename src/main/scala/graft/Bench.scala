@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — times the headline queries (names match BASELINE.md)
   * at SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -16,19 +15,51 @@ import org.apache.spark.sql.SparkSession
   *    against BASELINE.md's "full materialization" vanilla table (same
   *    action, measured by `graft.BaselineBench`).
   *
-  * The line also carries `all_queries`: one single-shot noop-write
+  * The line also carries `all_queries`: one warm best-of-3 noop-write
   * timing per declared query (headline included, measured on the same
   * uniform basis), so regressions in the non-headline tail are
   * machine-diffable round over round (the SCALING.md audit, emitted by
-  * the artifact instead of hand-refreshed). SPARK_GRAFT_BENCH_ALL
-  * promotes every all_queries entry to warm best-of-3 (slow, dev
-  * audit); SPARK_GRAFT_BENCH_HEADLINE_ONLY skips the map for quick
-  * loops.
+  * the artifact instead of hand-refreshed).
+  *
+  * The timing kernel below ([[timed]], [[warmBest]], [[fmt]],
+  * [[loadAvg1m]]) is the one every measurement main shares.
   */
 object Bench {
   /** Headline metrics — keep names identical to BASELINE.md rows. */
   val headline: Seq[String] =
     Seq("q1_pricing_summary", "q3_join_agg", "window_topk", "tumbling_window")
+
+  /** Wall seconds of one run of `body`. */
+  private[graft] def timed(body: => Any): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Warm best-of-3: one untimed warm-up run, then the minimum of 3 timed
+    * runs — ambient load on a shared box adds hundreds of ms of one-sided
+    * noise, so min is the robust stat. A run that throws yields the -1
+    * sentinel and one `[label] name failed: …` line on stderr, never a
+    * short "time until it threw" that silently shrinks a total.
+    */
+  private[graft] def warmBest(label: String, name: String)(body: => Any): Double =
+    try { body; Seq.fill(3)(timed(body)).min }
+    catch { case e: Throwable =>
+      System.err.println(s"[$label] $name failed: ${e.getMessage}")
+      -1.0
+    }
+
+  /** Seconds as artifact JSON: ms precision (raw Double.toString's 17
+    * significant digits tripled the line size and got the round-6
+    * artifact truncated mid-key by a log-tail capture), "-1"
+    * for a failure. Locale.ROOT: the f"" interpolator is locale-sensitive,
+    * and a comma-decimal JVM locale would emit "1,234" — invalid JSON.
+    */
+  private[graft] def fmt(v: Double): String =
+    if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private[graft] def toJson(rs: Seq[(String, Double)]): String =
+    rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
 
   /** 1-minute load average from /proc/loadavg (-1 where unreadable,
     * e.g. non-Linux). Recorded at artifact start and end so a run taken
@@ -36,7 +67,7 @@ object Bench {
     * 2–5× "regressions" traced to ambient load, each costing a manual
     * re-measurement.
     */
-  private def loadAvg1m(): Double =
+  private[graft] def loadAvg1m(): Double =
     try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/loadavg"))).split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
@@ -59,132 +90,63 @@ object Bench {
     val loadStart = loadAvg1m()
     val spark = Engine.session("graft-bench")
     val qs = SparkEntry.queries
-    val headlineOnly = sys.env.contains("SPARK_GRAFT_BENCH_HEADLINE_ONLY")
-    val singleShot = sys.env.contains("SPARK_GRAFT_BENCH_SINGLESHOT")
 
-    // A crashing or missing query must surface as a -1 sentinel, never as
-    // a short "time until it threw" that silently shrinks the total.
-    def once(name: String, full: Boolean): Double = {
-      val t0 = System.nanoTime()
-      try {
+    def rigorous(name: String, full: Boolean): Double =
+      if (!qs.contains(name)) {
+        System.err.println(s"[bench] $name not in registry"); -1.0
+      } else warmBest("bench", name) {
         val df = qs(name)(spark, sfDir)
         if (full) df.write.format("noop").mode("overwrite").save() else df.count()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        -1.0
       }
-    }
-    // warm-up + best-of-3: ambient load on a shared box adds hundreds of
-    // ms of one-sided noise; min is the robust stat
-    def rigorous(name: String, full: Boolean): Double = {
-      val warm = once(name, full)
-      if (warm < 0) -1.0
-      else Seq(once(name, full), once(name, full), once(name, full)).min
-    }
 
-    val results = headline.map { name =>
-      if (!qs.contains(name)) {
-        System.err.println(s"[bench] $name not in registry"); name -> -1.0
-      } else name -> rigorous(name, full = false)
-    }
-    val resultsFull = headline.map { name =>
-      name -> (if (qs.contains(name)) rigorous(name, full = true) else -1.0)
-    }
-    // all_queries is measured UNIFORMLY: warm best-of-3 per query (same
-    // basis as the headline) — the round-7 artifact proved single-shot
-    // numbers on a contended box are pure noise (unchanged queries
-    // "regressed" 2–12×), so min-of-3 is the only form comparable round
-    // over round. Session-level caches (the shared l6 chain) warm on the
-    // first run exactly as a real session would; the reported min is the
-    // steady-state query cost. SPARK_GRAFT_BENCH_SINGLESHOT restores the
-    // cheap one-pass map for quick dev loops.
-    // The memoized l6 near-dup chain (shared by l6_simjoin /
-    // l6_dedup_docs / l8_cluster_sample / l0_pipeline) builds once per
-    // session, so per-query warm best-of-3 reports steady-state cost
-    // with the build paid during a warm-up pass. Surface the build as
-    // its own artifact field — a one-time cost a cluster deployment
-    // schedules like an index build must stay visible, not vanish into
-    // an unreported warm-up.
-    def timedBuild(label: String)(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try { body; (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $label build failed: ${e.getMessage}")
+    val results = headline.map(n => n -> rigorous(n, full = false))
+    val resultsFull = headline.map(n => n -> rigorous(n, full = true))
+    // The session-memoized index builds, timed once each in this order.
+    // Warm per-query best-of-3 pays a build during a warm-up pass and
+    // reports steady-state cost, so a one-time cost a cluster deployment
+    // schedules like an index build must surface here, not vanish into
+    // an unreported warm-up:
+    //  - l6_chain: the near-dup chain (l6_simjoin, l6_dedup_docs,
+    //    l8_cluster_sample, l0_pipeline);
+    //  - s7_exact_profile / s7_approx_sketch: the catalog's exact ANALYZE
+    //    pass (s7_profile and the approx gate's acceptance band) and the
+    //    HLL++ sketch catalog;
+    //  - bm25: the corpus BM25 table (l4_bm25, m3_mrr, m5_ndcg);
+    //  - pq_books: the PQ codebooks (joint Lloyd chain);
+    //  - nb_classifier: the NB train+score frame (l4_quality_classifier,
+    //    m7_calibration, m7_confusion);
+    //  - bloom_filter: the decontamination filter (l9_bloom_decontam).
+    import graft.operators.{Curation, Dedup, Profile, Similarity, TextOps}
+    val builds: Seq[(String, () => Any)] = Seq(
+      "l6_chain" -> (() => Dedup.l6DedupDocs(spark, sfDir).count()),
+      "s7_exact_profile" -> (() => Profile.s7Profile(spark, sfDir).count()),
+      "s7_approx_sketch" -> (() => Profile.s7ProfileApprox(spark, sfDir).count()),
+      "bm25" -> (() => TextOps.defaultBm25(spark, sfDir).count()),
+      "pq_books" -> (() => Similarity.defaultPqBooks(Tables(spark, sfDir)).count()),
+      "nb_classifier" -> (() => TextOps.defaultNbScored(spark, sfDir).count()),
+      "bloom_filter" -> (() => Curation.defaultBloomBuild(spark, sfDir)))
+    val sharedBuild = builds.map { case (key, build) =>
+      key -> (try timed(build()) catch { case e: Throwable =>
+        System.err.println(s"[bench] $key build failed: ${e.getMessage}")
         -1.0
-      }
+      })
     }
-    val sharedBuild: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("l6 chain") {
-        graft.operators.Dedup.l6DedupDocs(spark, sfDir).count() }
-    // the catalog's exact ANALYZE pass: memoized per session (s7_profile
-    // and the approx gate's acceptance band both consume it), so its
-    // one-time cost must surface here — warm per-query minima would
-    // otherwise hide it entirely
-    val s7Build: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("s7 exact profile") {
-        graft.operators.Profile.s7Profile(spark, sfDir).count() }
-    // the HLL++ sketch catalog: memoized per session like the exact pass
-    // (its warm declared-query cost is the ~50-row read, not the sweep)
-    val s7ApproxBuild: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("s7 approx sketch") {
-        graft.operators.Profile.s7ProfileApprox(spark, sfDir).count() }
-    // the corpus BM25 table: memoized per session (l4_bm25, m3_mrr and
-    // m5_ndcg all consume it) — an index build, surfaced like the others
-    val bm25Build: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("bm25 table") {
-        graft.operators.TextOps.defaultBm25(spark, sfDir).count() }
-    // the PQ codebooks (joint Lloyd chain): memoized per session like the
-    // IVF centroids — an index build a deployment schedules once
-    val pqBuild: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("pq codebooks") {
-        graft.operators.Similarity.defaultPqBooks(Tables(spark, sfDir)).count() }
-    // the NB classifier train+score frame: memoized per session
-    // (l4_quality_classifier, m7_calibration, m7_confusion all consume
-    // it) — a model training a deployment schedules once
-    val nbBuild: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("nb classifier") {
-        graft.operators.TextOps.defaultNbScored(spark, sfDir).count() }
-    // the decontamination bloom filter: built once per benchmark and
-    // memoized per session (l9_bloom_decontam consumes it) — an index
-    // build like the PQ codebooks, surfaced the same way
-    val bloomBuild: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("bloom filter") {
-        graft.operators.Curation.defaultBloomBuild(spark, sfDir) }
-    val tail = qs.keys.toSeq.sorted.filterNot(headline.contains)
     // SPARK_GRAFT_BENCH_QUERIES=a,b,c restricts the per-query map — dev
     // loop for timing one query's change without a full pass
     val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
-    val allResults =
-      if (headlineOnly) Nil
-      else (headline.filter(qs.contains) ++ tail)
-        .filter(n => only.forall(_.contains(n)))
-        .map { n =>
-          n -> (if (singleShot) once(n, full = true) else rigorous(n, full = true))
-        }
+    // all_queries is measured UNIFORMLY: warm best-of-3 noop per query —
+    // the round-7 artifact proved single-shot numbers on a contended box
+    // are pure noise (unchanged queries "regressed" 2–12×). The headline
+    // entries are the queries_full values, measured under that protocol.
+    val fullByName = resultsFull.toMap
+    val allResults = qs.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n)))
+      .map(n => n -> fullByName.getOrElse(n, rigorous(n, full = true)))
 
-    // ms precision is plenty; raw Double.toString (17 sig digits) tripled
-    // the line size and got the round-6 artifact truncated mid-key by the
-    // driver's log-tail capture
-    // Locale.ROOT: the f"" interpolator is locale-sensitive, and a JVM
-    // defaulting to a comma-decimal locale would emit "1,234" — invalid
-    // JSON — into the artifact
-    def fmt(v: Double) =
-      if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def toJson(rs: Seq[(String, Double)]) =
-      rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val total = if (results.exists(_._2 < 0)) -1.0 else results.map(_._2).sum
     val allJson =
-      if (headlineOnly) ""
-      else s""","shared_build":{"l6_chain":${fmt(sharedBuild)},"s7_exact_profile":${fmt(s7Build)},"s7_approx_sketch":${fmt(s7ApproxBuild)},"bm25":${fmt(bm25Build)},"pq_books":${fmt(pqBuild)},"nb_classifier":${fmt(nbBuild)},"bloom_filter":${fmt(bloomBuild)}},"all_queries":${toJson(allResults.sortBy(_._1))}"""
+      s""","shared_build":${toJson(sharedBuild)},"all_queries":${toJson(allResults)}"""
     // contention evidence: ambient load at both ends plus this JVM's own
     // cpu-vs-wall split — a reader can discount an inflated artifact
     // (load ≫ cores in use, or wall ≫ cpu/cores) without re-running it
@@ -199,7 +161,7 @@ object Bench {
       val hostCores = Runtime.getRuntime.availableProcessors
       s""","load":{"start_1m":${fmt(loadStart)},"end_1m":${fmt(loadAvg1m())},"cores":$cores,"host_cores":$hostCores,"jvm_cpu_sec":${fmt(processCpuSec())},"wall_sec":${fmt((System.nanoTime() - wallT0) / 1e9)},"contended":${loadStart > 2.0}}"""
     }
-    // a FILTERED or headline-only dev-loop run must not clobber the
+    // a FILTERED dev-loop run must not clobber the
     // committed full artifact — partial maps default to /tmp, only a
     // full pass lands in the repo (explicit SPARK_GRAFT_BENCH_OUT
     // overrides either way). A CONTENDED-box run is likewise diverted:
@@ -216,7 +178,7 @@ object Bench {
       System.err.println(f"[bench] start_1m=$loadStart%.2f > 2: contended box, " +
         "diverting artifact to /tmp (committed BENCH_FULL.json left untouched)")
     val defaultOut =
-      if (headlineOnly || singleShot || only.isDefined || contended) "/tmp/BENCH_FULL.json"
+      if (only.isDefined || contended) "/tmp/BENCH_FULL.json"
       else java.nio.file.Paths.get(sys.props("user.dir"), "BENCH_FULL.json").toString
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
     // The ONE-LINE contract the driver parses is the LAST JSON line of

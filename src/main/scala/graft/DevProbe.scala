@@ -1,8 +1,9 @@
 package graft
 
 /** Dev-only probe: run one declared query N times in a session and print
-  * per-run wall seconds (bench reports only min-of-3 — this shows the
-  * cold/warm split so driver-side analysis cost is visible). Usage:
+  * per-run wall seconds and one line per stage (bench reports only
+  * min-of-3 — this shows the cold/warm split so driver-side analysis cost
+  * is visible). Usage:
   *   tools/run.sh graft.DevProbe <sfDir> <query> [runs]
   */
 object DevProbe {
@@ -22,17 +23,15 @@ object DevProbe {
         val rt = s.stageInfo.taskMetrics match {
           case null => 0L; case m => m.executorRunTime }
         taskTimeMs.addAndGet(rt)
-        if (sys.env.contains("SPARK_GRAFT_PROBE_STAGES"))
-          println(f"[stage] ${s.stageInfo.stageId}%4d ${rt / 1000.0}%7.2f s  " +
-            s"tasks=${s.stageInfo.numTasks}  ${s.stageInfo.name.take(90)}")
+        println(f"[stage] ${s.stageInfo.stageId}%4d ${rt / 1000.0}%7.2f s  " +
+          s"tasks=${s.stageInfo.numTasks}  ${s.stageInfo.name.take(90)}")
       }
     })
     val q = SparkEntry.queries(name)
     for (i <- 1 to runs) {
       val (j0, s0, t0m) = (jobs.get, stages.get, taskTimeMs.get)
-      val t0 = System.nanoTime()
-      q(spark, sfDir).write.format("noop").mode("overwrite").save()
-      println(f"[probe] $name run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s  " +
+      val sec = Bench.timed(q(spark, sfDir).write.format("noop").mode("overwrite").save())
+      println(f"[probe] $name run $i: $sec%.3f s  " +
         f"jobs=${jobs.get - j0} stages=${stages.get - s0} taskTime=${(taskTimeMs.get - t0m) / 1000.0}%.2f s")
     }
     spark.stop()

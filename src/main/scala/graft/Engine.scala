@@ -111,14 +111,7 @@ object Engine {
     */
   def parallelFloor(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    // the planned-partition probe (df.rdd) costs real per-invocation
-    // driver time (plan → physical → RDD DAG), so the decision is
-    // memoized per (session, canonical plan) — deterministic inputs
-    // (parquet-rooted frames over an immutable fixture dir) make the
-    // count a pure function of the plan
-    val n = FloorPartsCache.getOrElseUpdate(df.sparkSession,
-      df.queryExecution.analyzed.canonicalized)(df.rdd.getNumPartitions)
-    if (n < target) df.repartition(target) else df
+    if (plannedPartitions(df) < target) df.repartition(target) else df
   }
 
   /** [[parallelFloor]] with HASH partitioning on a deterministic key —
@@ -129,10 +122,24 @@ object Engine {
     */
   def parallelFloorBy(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val n = FloorPartsCache.getOrElseUpdate(df.sparkSession,
-      df.queryExecution.analyzed.canonicalized)(df.rdd.getNumPartitions)
-    if (n < target) df.repartition(target, key) else df
+    if (plannedPartitions(df) < target) df.repartition(target, key) else df
   }
+
+  /** The partition count `df` plans to. The probe (df.rdd) costs real
+    * per-invocation driver time (plan → physical → RDD DAG), so it is
+    * memoized per (session, canonical plan) — deterministic inputs
+    * (parquet-rooted frames over an immutable fixture dir) make the count
+    * a pure function of the plan. A checkpointed frame (a `LogicalRDD`
+    * root) skips the memo: every materialization is a new RDD, so its key
+    * would never hit again and would pin the RDD until the session stops,
+    * while reading its partition count plans nothing.
+    */
+  private def plannedPartitions(df: DataFrame): Int =
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getNumPartitions
+      case plan => FloorPartsCache.getOrElseUpdate(df.sparkSession,
+        plan.canonicalized)(df.rdd.getNumPartitions)
+    }
 
   private val FloorPartsCache = new SessionCache[
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int]

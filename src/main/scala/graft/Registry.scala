@@ -3630,7 +3630,12 @@ object Registry {
     * drain snapshot (s2_admission), the file-roundtrip writers (s6_*),
     * and the iterative forms whose loop actions produce checkpointed
     * score/label frames (g1_*, g3, l1_substr_dedup_fix) — so each of
-    * those still re-executes its real work per invocation.
+    * those still re-executes its real work per invocation. A query that
+    * pins only REFERENCE state at construction, not its output rows, is
+    * memoized on purpose: l8_importance_gate checkpoints its reference
+    * quarter's NLL table and score bounds once per (session, dir), the
+    * offline-reference posture [[graft.operators.Curation.importanceRef]]
+    * documents, and every action still scores the corpus afresh.
     */
   private val FrameMemo = new graft.SessionCache[String, org.apache.spark.sql.DataFrame]
   private val MemoFrames: Set[String] = Set(

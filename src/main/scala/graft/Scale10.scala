@@ -91,10 +91,6 @@ object Scale10 {
     * quadratic term (which lands near F² at factor F) pass.
     */
   def superlinearRatio(factor: Int): Double = factor * 1.2
-  private def loadAvg1m(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg"))).split("\\s+")(0).toDouble
-    catch { case _: Throwable => -1.0 }
 
   /** Required-single-partition exchanges in an executed plan that feed
     * anything but a global aggregate or collect-limit (see the class
@@ -232,7 +228,7 @@ object Scale10 {
     val tenx = s"$work/sf${factor}x"
     val marker = java.nio.file.Paths.get(s"$work/.synth_from_$factor")
     val spark = Engine.session("graft-scale10")
-    val loadStart = loadAvg1m()
+    val loadStart = Bench.loadAvg1m()
 
     val synthT0 = System.nanoTime()
     // marker carries a synth VERSION: changing the expansion semantics
@@ -273,11 +269,8 @@ object Scale10 {
       // session so every action's executed plan reaches the audit
       s.listenerManager.register(audit)
       audit.enabled = auditOn
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        qs(name)(s, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def once(): Double =
+        Bench.timed(qs(name)(s, dir).write.format("noop").mode("overwrite").save())
       val cold = once()
       val warm = (1 to 2).map(_ => once()).min
       // no-silent-caps: record the OUTPUT row count at this scale, so an
@@ -324,7 +317,7 @@ object Scale10 {
       (name, c1, w1, c10, w10, viol, n1, n10)
     }
 
-    val loadEnd = loadAvg1m()
+    val loadEnd = Bench.loadAvg1m()
     val gate = superlinearRatio(factor)
     val anyViol = rows.exists(_._6.nonEmpty)
     val anySuper = rows.exists { case (_, c1, _, c10, _, _, _, _) => c10 / c1 > gate }

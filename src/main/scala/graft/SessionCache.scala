@@ -18,11 +18,13 @@ import scala.collection.concurrent.TrieMap
   * last access, with no reliance on callers knowing to invalidate.
   *
   * Same immutable-corpus-dir assumption as every consumer: a caller that
-  * rewrites a fixture dir in place mid-session must `clear()` explicitly
-  * (spec-pinned recompute-equality lives with each consumer's spec).
+  * rewrites a fixture dir in place mid-session must call
+  * [[SessionCache.clearAll]] (spec-pinned recompute-equality lives with
+  * each consumer's spec).
   */
 final class SessionCache[K, V] {
   private val m = TrieMap.empty[(SparkSession, K), V]
+  SessionCache.instances.add(this)
 
   /** Memoized lookup; `build` may run more than once under a race (the
     * plain `TrieMap.getOrElseUpdate` contract) — consumers cache
@@ -43,5 +45,20 @@ final class SessionCache[K, V] {
       if (k._1.sparkContext.isStopped) m.remove(k)
     }
 
-  def clear(): Unit = m.clear()
+  private def clear(): Unit = m.clear()
+}
+
+object SessionCache {
+  /** Every memo the engine made. The memos are fields of singleton
+    * objects, so this holds a fixed handful for the life of the JVM.
+    */
+  private val instances = new java.util.concurrent.ConcurrentLinkedQueue[SessionCache[_, _]]()
+
+  /** Drop every memoized entry of every memo, for all sessions — the one
+    * escape hatch from the immutable-corpus-dir assumption. Memos depend
+    * on each other (the PQ codebook frame and its collected rows, the
+    * catalog's exact and approx passes), so clearing one alone can pair a
+    * fresh entry with a stale one.
+    */
+  def clearAll(): Unit = instances.forEach(_.clear())
 }

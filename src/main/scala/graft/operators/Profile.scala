@@ -138,7 +138,7 @@ object Profile {
     * approx-profile's ±3·rsd acceptance band); an ANALYZE pass is run
     * once and its ~50-row stats table reused, the [[graft.operators
     * .Similarity.defaultCentroids]] discipline. Same immutable-corpus-dir
-    * assumption; [[invalidateSessionCache]] is the escape hatch
+    * assumption; [[graft.SessionCache.clearAll]] is the escape hatch
     * (spec-pinned in RelationalSpec).
     */
   def s7Profile(spark: SparkSession, dir: String): DataFrame = {
@@ -155,11 +155,6 @@ object Profile {
   }
 
   private val ExactProfileCache = new graft.SessionCache[String, DataFrame]
-
-  def invalidateSessionCache(): Unit = {
-    ExactProfileCache.clear()
-    ApproxProfileCache.clear()
-  }
 
   /** The 100 TB variant: same single-pass shape, HLL++ distinct counts —
     * the documented default at scale, where s7Profile's extra exact

@@ -750,20 +750,6 @@ object Similarity {
     CentroidCache.getOrElseUpdate(spark, (dir, nCells))(
       trainedCentroids(Tables(spark, dir).embeddings, nCells))
 
-  /** Drop every memoized per-session frame ([[defaultCentroids]],
-    * [[embeddingCount]]). The caches assume a corpus dir is IMMUTABLE
-    * within a session — the parquet-lake posture every reader here takes
-    * — so a caller that rewrites a fixture dir in place mid-session must
-    * invalidate explicitly or stale centroids/counts are served
-    * (spec-pinned in LlmOpsSpec).
-    */
-  def invalidateSessionCaches(): Unit = {
-    CentroidCache.clear()
-    CorpusCountCache.clear()
-    PqBooksCache.clear()
-    BatchQueryCache.clear()
-  }
-
   /** Semantic-dedup cosine threshold for the declared query. Real
     * corpora run SemDeDup-style pruning at τ ≈ 0.95+ (embeddings of
     * near-identical documents); the fixture's embeddings are
@@ -806,8 +792,8 @@ object Similarity {
   /** Corpus row count memoized per (session, dir) — one metadata-cheap
     * count job per session feeds every [[semCellsFor]] call (Verify and
     * Bench invoke the declared query repeatedly). Same immutable-corpus
-    * assumption as [[CentroidCache]]; [[invalidateSessionCaches]] clears
-    * both.
+    * assumption as [[CentroidCache]]; [[graft.SessionCache.clearAll]]
+    * clears both.
     */
   private val CorpusCountCache = new graft.SessionCache[String, Long]
 
@@ -957,7 +943,7 @@ object Similarity {
     * re-training the joint Lloyd chain per `l3_pq_topk` execution would
     * charge the build once per query. Cached frame == what the
     * un-memoized call computes (the final Lloyd round is already
-    * materialized); [[invalidateSessionCaches]] clears it.
+    * materialized); [[graft.SessionCache.clearAll]] clears it.
     */
   private val PqBooksCache =
     new graft.SessionCache[(String, Int, Int), DataFrame]
@@ -1228,7 +1214,7 @@ object Similarity {
     * per (session, dir, ids) — bounded query metadata over an immutable
     * corpus dir, the [[defaultCentroids]] discipline — so a serving/eval
     * session re-ranking against the same query batch pays the id-probe
-    * scan once, not once per execution; [[invalidateSessionCaches]]
+    * scan once, not once per execution; [[graft.SessionCache.clearAll]]
     * clears it with the rest.
     */
   private val BatchQueryCache =

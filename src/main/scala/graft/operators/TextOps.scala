@@ -272,7 +272,7 @@ object TextOps {
     * recompute); the one-time build cost surfaces in the bench
     * artifact's `shared_build.bm25` instead of vanishing into warm-up.
     * Same immutable-corpus-dir assumption as every session cache;
-    * [[invalidateSessionCache]] clears it.
+    * [[graft.SessionCache.clearAll]] clears it.
     */
   private val bm25Cache = new graft.SessionCache[String, DataFrame]
   private[graft] def defaultBm25(spark: org.apache.spark.sql.SparkSession,
@@ -281,12 +281,6 @@ object TextOps {
       import graft.Ckpt._
       bm25Frame(Tables(spark, dir).documents).materialize()
     }
-
-  def invalidateSessionCache(): Unit = {
-    bm25Cache.clear()
-    bpeTrainCache.clear()
-    nbScoreCache.clear()
-  }
 
   /** Per-(doc, token) BM25 frame over any documents frame with a
     * pluggable tokenizer (declared queries keep [[spaceTokenizer]]).
@@ -561,7 +555,7 @@ object TextOps {
     * one train+score chain feeds the declared classifier query AND the
     * M7 eval family (calibration, confusion), the [[defaultBm25]]
     * discipline; its one-time build surfaces in Bench's `shared_build`.
-    * [[invalidateSessionCache]] clears it with the rest.
+    * [[graft.SessionCache.clearAll]] clears it with the rest.
     */
   private val nbScoreCache = new graft.SessionCache[String, DataFrame]
   private[graft] def defaultNbScored(spark: SparkSession, dir: String): DataFrame =

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSuite {
 
   test("partitioned layout: a date-filtered scan prunes partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString + "/events_by_day"
+    val dir = tempDir("graft-part").toString + "/events_by_day"
     val ev = tables.events.withColumn("day", to_date(col("ts")))
     ev.write.partitionBy("day").mode("overwrite").parquet(dir)
     val oneDay = spark.read.parquet(dir).filter(col("day") === lit("2024-01-05"))
@@ -26,7 +26,7 @@ class BucketingSpec extends SparkSuite {
     // dimension, must scan only the partitions the dim filter selects —
     // Catalyst inserts a dynamicpruning subquery on the fact's partition
     // column at planning time
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString + "/events_by_type"
+    val dir = tempDir("graft-dpp").toString + "/events_by_type"
     tables.events.write.partitionBy("event_type").mode("overwrite").parquet(dir)
     val fact = spark.read.parquet(dir)
     val dim = tables.events.select(col("event_type")).distinct()
@@ -47,7 +47,7 @@ class BucketingSpec extends SparkSuite {
 
   test("persisted IVF index: probe scans only the nprobe cell partitions") {
     import graft.operators.Similarity
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val idxDir = tempDir("graft-ivf").toString
     Similarity.buildIvfIndex(tables.embeddings, idxDir)
     val q = tables.embeddings.filter(col("vec_id") === 0L)
       .select(col("embedding")).collect()(0)
@@ -78,7 +78,7 @@ class BucketingSpec extends SparkSuite {
 
   test("persisted IVF-SQ index: pruned scan + integer rank + rescore == float probe") {
     import graft.operators.Similarity
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-ivfsq").toString
+    val idxDir = tempDir("graft-ivfsq").toString
     Similarity.buildIvfSqIndex(tables.embeddings, idxDir)
     val q = tables.embeddings.filter(col("vec_id") === 0L)
       .select(col("embedding")).collect()(0)
@@ -100,7 +100,7 @@ class BucketingSpec extends SparkSuite {
 
   test("persisted PQ index: codes-only candidate scan + ADC rank + exact rescore == in-query PQ") {
     import graft.operators.Similarity
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-pq").toString
+    val idxDir = tempDir("graft-pq").toString
     Similarity.buildPqIndex(tables.embeddings, idxDir)
     val q = tables.embeddings.filter(col("vec_id") === 0L)
       .select(col("embedding")).collect()(0)
@@ -140,7 +140,7 @@ class BucketingSpec extends SparkSuite {
 
   test("batched ANN: batch PQ probe == each solo probe; batch exact top-k == brute force") {
     import graft.operators.Similarity
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-pq-batch").toString
+    val idxDir = tempDir("graft-pq-batch").toString
     Similarity.buildPqIndex(tables.embeddings, idxDir)
     val queries = Similarity.batchQueryVecs(tables, Similarity.BatchQueryIds)
     // one codes pass + one ADC broadcast for the whole batch must slice
@@ -192,7 +192,7 @@ class BucketingSpec extends SparkSuite {
       s"label predicate not pushed to the codes scan:\n$fScan")
 
     // batched IVF probe: one union-pruned scan slices into the solo probes
-    val ivfDir = java.nio.file.Files.createTempDirectory("graft-ivf-batch").toString
+    val ivfDir = tempDir("graft-ivf-batch").toString
     Similarity.buildIvfIndex(tables.embeddings, ivfDir)
     val ivfServed = Similarity.probeIvfIndexBatch(spark, ivfDir, queries, 10)
     for (id <- Similarity.BatchQueryIds) {

@@ -34,7 +34,7 @@ class CheckpointSpec extends SparkSuite {
     val ccLocal = Dedup.connectedComponents(ids, pairs).collect().toSet
     val prLocal = Graph.g1PageRank(spark, sf).collect().toSet
     val pdLocal = Graph.g1PageRankDangling(spark, sf).collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt").toString
+    val dir = tempDir("graft-reliable-ckpt").toString
     spark.conf.set(Ckpt.DirKey, dir)
     try {
       val ccReliable = Dedup.connectedComponents(ids, pairs).collect().toSet

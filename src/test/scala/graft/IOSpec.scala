@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class IOSpec extends SparkSuite {
 
   private def roundTrip(fmt: String): Unit = {
-    val dir = Files.createTempDirectory(s"graft-io-$fmt").toString + "/out"
+    val dir = tempDir(s"graft-io-$fmt").toString + "/out"
     val src = tables.customer
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"), col("c_acctbal"),
         col("c_mktsegment"))
@@ -26,7 +26,7 @@ class IOSpec extends SparkSuite {
     import graft.sources.BatchIO
     val src = tables.lineitem // pre-shuffled into many tiny partitions
       .repartition(64, col("l_partkey"))
-    val dir = Files.createTempDirectory("graft-io-compact").toString + "/out"
+    val dir = tempDir("graft-io-compact").toString + "/out"
     // force a small target so the estimate yields a handful of files
     val n = BatchIO.writeCompacted(src, dir, targetBytes = 256L << 10,
       sortKeys = Seq(col("l_orderkey")))
@@ -51,7 +51,7 @@ class IOSpec extends SparkSuite {
   test("schema evolution: mergeSchema unions generations, absent columns null-fill") {
     // a long-lived table's files never share one schema; the read side
     // must union generations without rewriting old files
-    val dir = Files.createTempDirectory("graft-evolve").toString + "/t"
+    val dir = tempDir("graft-evolve").toString + "/t"
     tables.customer.select(col("c_custkey"), col("c_name"))
       .write.parquet(s"$dir/gen=1")
     tables.customer.select(col("c_custkey"), col("c_name"), col("c_acctbal"))
@@ -66,7 +66,7 @@ class IOSpec extends SparkSuite {
 
   test("z-order layout: a selective filter on either dimension skips most row groups") {
     import graft.sources.Layout
-    val base = Files.createTempDirectory("graft-zorder").toString
+    val base = tempDir("graft-zorder").toString
     val li = tables.lineitem
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"), col("l_quantity"))
     // same rows, same file/row-group geometry — only the ROW ORDER
@@ -118,7 +118,7 @@ class IOSpec extends SparkSuite {
 
   test("S6c dynamic partition overwrite: backfill touches only the emitted partitions") {
     import graft.sources.BatchIO
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpo").toString + "/t"
+    val dir = tempDir("graft-dpo").toString + "/t"
     val docs = tables.documents.select(col("doc_id"), col("text"), col("lang"))
     BatchIO.overwritePartitions(docs, dir, Seq("lang"))
     // materialize the pre-backfill state NOW — a lazy read over the same

@@ -498,7 +498,7 @@ class LlmOpsSpec extends SparkSuite {
 
   test("L4 TF-IDF: ubiquitous tokens weigh zero, rare tokens weigh most") {
     import org.apache.spark.sql.SaveMode
-    val dir = java.nio.file.Files.createTempDirectory("graft_tfidf").toString
+    val dir = tempDir("graft_tfidf").toString
     Seq((1L, "common rare1 common x"), (2L, "common x y"), (3L, "common z"))
       .toDF("doc_id", "text")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/documents.parquet")
@@ -2481,7 +2481,7 @@ class LlmOpsSpec extends SparkSuite {
       df.collect().map(_.toSeq.toList).sortBy(_.toString).toList
     val fresh = rows(TextOps.bm25Frame(tables.documents))
     assert(rows(TextOps.defaultBm25(spark, sf)) == fresh, "cached != recompute")
-    TextOps.invalidateSessionCache()
+    SessionCache.clearAll()
     assert(rows(TextOps.defaultBm25(spark, sf)) == fresh, "post-invalidation != recompute")
   }
 
@@ -2542,10 +2542,36 @@ class LlmOpsSpec extends SparkSuite {
     // entries (the immutable-corpus-dir assumption's escape hatch)
     val before = Similarity.defaultCentroids(TestSpark.spark, sf)
     val nBefore = Similarity.embeddingCount(TestSpark.spark, sf)
-    Similarity.invalidateSessionCaches()
+    SessionCache.clearAll()
     val after = Similarity.defaultCentroids(TestSpark.spark, sf)
     assert(!(before eq after), "cleared cache must not serve the old frame")
     assert(Similarity.embeddingCount(TestSpark.spark, sf) == nBefore)
+  }
+
+  test("L3 PQ after an in-place corpus rewrite: clearAll() drops the codebooks AND their argmin literals") {
+    // pqTopK reads two memos built from one training run: the codebook
+    // frame (ADC tables) and its collected rows (the encode's argmin
+    // literals). Clearing only the first pairs fresh ADC tables with
+    // stale literals and ranks the wrong candidates.
+    val dir = tempDir("graft-pq-rewrite")
+    val emb = dir.resolve("embeddings.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "embeddings.parquet"), emb)
+    val t = Tables(spark, dir.toString)
+    val before = Similarity.pqTopK(t, 0L, 10).collect().toSeq
+    // rewrite the corpus in place: same ids, labels and schema, new vectors
+    val rows = t.embeddings.collect()
+    val schema = t.embeddings.schema
+    val rnd = new scala.util.Random(7)
+    val changed = rows.map(r => org.apache.spark.sql.Row(r.getLong(0),
+      Seq.fill(r.getSeq[Float](1).size)(rnd.nextGaussian().toFloat), r.getInt(2)))
+    java.nio.file.Files.delete(emb)
+    spark.createDataFrame(java.util.Arrays.asList(changed: _*), schema)
+      .write.parquet(emb.toString)
+    SessionCache.clearAll()
+    val after = Similarity.pqTopK(t, 0L, 10)
+    assert(after.collect().toSeq != before, "the rewrite must change the answer")
+    assertSameRows(after, Similarity.pqTopKJoinForm(t, 0L, 10))
+    SessionCache.clearAll() // no memo may keep a frame over the deleted dir
   }
 
   test("L10 PII scrub: redacts email/url/ip spans, idempotent, clean text unchanged") {

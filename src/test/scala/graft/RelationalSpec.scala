@@ -109,7 +109,7 @@ class RelationalSpec extends SparkSuite {
       df.collect().map(_.toSeq.toList).toList
     val first = rows(Profile.s7Profile(spark, sf))   // may hit or fill the cache
     assert(rows(Profile.s7Profile(spark, sf)) == first, "cached != first")
-    Profile.invalidateSessionCache()
+    SessionCache.clearAll()
     assert(rows(Profile.s7Profile(spark, sf)) == first, "recompute != cached")
   }
 

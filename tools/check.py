@@ -15,7 +15,7 @@ requires three things of each pair:
 Dev tool only — not part of the library (driver has duckdb; our engine
 doesn't depend on it).
 """
-import json, sys, glob, math
+import json, sys, glob, math, tempfile
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -62,8 +62,12 @@ def print_diff(spark_rows, duck_rows):
 def types_by_name(rel):
     return sorted(zip(rel.columns, (str(t) for t in rel.types)))
 
-def main(sf_dir, out_dir):
-    con = duckdb.connect()
+def main(sf_dir, out_dir, tmp_dir):
+    # bounded memory, threads and spill: at its defaults DuckDB once filled
+    # 20 GB of disk with temp files on the l4_bpe_encode oracle
+    con = duckdb.connect(config={"memory_limit": "2GB", "threads": 4,
+                                 "temp_directory": tmp_dir,
+                                 "max_temp_directory_size": "8GB"})
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
@@ -116,4 +120,6 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    with tempfile.TemporaryDirectory(prefix="check-duckdb-") as tmp:
+        rc = main(sys.argv[1], sys.argv[2], tmp)
+    sys.exit(rc)
