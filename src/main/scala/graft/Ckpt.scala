@@ -67,5 +67,18 @@ object Ckpt {
           else df.localCheckpoint()
       }
     }
+
+    /** Free the blocks of a leaf that [[materialize]] made, once nothing
+      * will read it again (a later read fails with
+      * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). `unpersist` cannot do this: a
+      * checkpointed frame is not in Spark's CacheManager, so it releases
+      * nothing. Any frame whose analyzed root is not a checkpointed
+      * `LogicalRDD` is left alone, so a caller's cache is never dropped.
+      */
+    def release(): Unit = df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.isCheckpointed =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
   }
 }

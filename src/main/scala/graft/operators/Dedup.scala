@@ -941,6 +941,42 @@ object Dedup {
     */
   val DefaultCcIters = 4
 
+  /** The undirected edge list (src, dst) of a pair graph (a_id, b_id):
+    * each pair propagates labels in both directions. The pair list is
+    * checkpointed BEFORE the flip-union: the two union branches are
+    * separate lineages of the same (possibly very expensive) pair
+    * pipeline, and only the subtree below the last exchange gets reused
+    * between them — an LSH verify stage above it would execute TWICE.
+    * Checkpoint once, flip the materialized rows, and release the half
+    * once the union (computed once, re-read every round) holds them.
+    */
+  private def undirectedEdges(pairs: DataFrame): DataFrame = {
+    val half = pairs
+      .select(col("a_id").as("src"), col("b_id").as("dst"))
+      .materialize()
+    val edges = half
+      .unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
+      .materialize()
+    half.release()
+    edges
+  }
+
+  /** Per src, the min label over its neighbours: (src, nbr_min). */
+  private def neighbourMin(edges: DataFrame, labels: DataFrame): DataFrame =
+    edges
+      .join(labels.select(col("doc_id").as("dst"), col("label")), "dst")
+      .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
+
+  /** One min-label round: every doc's label becomes the min of its own
+    * and its neighbours' labels.
+    */
+  private def minStep(edges: DataFrame, labels: DataFrame): DataFrame =
+    labels
+      .join(neighbourMin(edges, labels).withColumnRenamed("src", "doc_id"),
+        Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
+        least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
+
   /** L7: near-duplicate CLUSTER COLLAPSE — from a pair graph to the
     * keep/drop decision a curation run actually executes. Connected
     * components by iterative min-label propagation: every doc starts as
@@ -969,29 +1005,12 @@ object Dedup {
                       iters: Int = DefaultCcIters,
                       verifyConverged: Boolean = true): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    // undirected graph: each pair propagates labels in both directions.
-    // The pair list is checkpointed BEFORE the flip-union: the two union
-    // branches are separate lineages of the same (possibly very
-    // expensive) pair pipeline, and only the subtree below the last
-    // exchange gets reused between them — an LSH verify stage above it
-    // would execute TWICE. Checkpoint once, flip the materialized rows.
-    val half = pairs
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-      .materialize()
-    val edges = half
-      .unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
-      .materialize() // computed once, re-read every round
+    val edges = undirectedEdges(pairs)
     var labels = ids.select(col("doc_id"), col("doc_id").as("label"))
     for (_ <- 1 to iters) {
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("dst"), col("label")), "dst")
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-        .withColumnRenamed("src", "doc_id")
-      labels = labels
-        .join(nbrMin, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        .materialize()
+      val next = minStep(edges, labels).materialize()
+      labels.release()
+      labels = next
     }
     // Convergence guard: a fixed round count that undershoots the graph
     // diameter yields SPLIT clusters, and because the DuckDB oracle
@@ -1002,9 +1021,7 @@ object Dedup {
     // larger `iters`. Skippable only where the caller replays an
     // intentionally-truncated round count (none of ours do).
     if (verifyConverged) {
-      val improvable = edges
-        .join(labels.select(col("doc_id").as("dst"), col("label")), "dst")
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
+      val improvable = neighbourMin(edges, labels)
         .join(labels.select(col("doc_id").as("src"), col("label")), "src")
         .filter(col("nbr_min") < col("label"))
         .count()
@@ -1106,39 +1123,22 @@ object Dedup {
     */
   def connectedComponents(ids: DataFrame, pairs: DataFrame,
                           maxRounds: Int = 40): DataFrame = {
-    // checkpoint-then-flip, same double-execution guard as clusterCollapse
-    val half = pairs
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-      .materialize()
-    val edges = half
-      .unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
-      .materialize()
-    var labels = ids.select(col("doc_id"), col("doc_id").as("label"))
-      .materialize()
+    val edges = undirectedEdges(pairs)
     var prevSum: Option[java.math.BigDecimal] = None
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("dst"), col("label")), "dst")
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-        .withColumnRenamed("src", "doc_id")
-      val l1 = labels.join(nbrMin, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-      val l2 = l1
-        .join(l1.select(col("doc_id").as("label"), col("label").as("plabel")), Seq("label"))
+    val (labels, _, converged) = Graph.convergedRounds(
+      ids.select(col("doc_id"), col("doc_id").as("label")), maxRounds) { prev =>
+      val l1 = minStep(edges, prev)
+      l1.join(l1.select(col("doc_id").as("label"), col("label").as("plabel")), Seq("label"))
         .select(col("doc_id"), col("plabel").as("label"))
-        .materialize()
+    } { (next, _) =>
       // cast the ELEMENTS, not the finished sum: a Long-typed aggregate
       // overflows (ANSI throw or silent wrap) before the cast could help
       // at 100 TB id magnitudes
-      val s = l2.agg(sum(col("label").cast("decimal(38,0)"))).collect()(0)
+      val s = next.agg(sum(col("label").cast("decimal(38,0)"))).collect()(0)
         .getDecimal(0)
-      converged = prevSum.contains(s)
+      val same = prevSum.contains(s)
       prevSum = Some(s)
-      labels = l2
-      round += 1
+      same
     }
     // unconverged labels are WRONG (non-minimal reps, multiple survivors
     // per real cluster) — failing loudly beats silently under-deduping

@@ -19,17 +19,14 @@ import org.apache.spark.sql.functions._
   * mass leak (≤ outdeg − 1 µ per node per round) is deterministic and
   * harmless for ranking.
   *
-  * Scale shape (same discipline as [[Dedup.clusterCollapse]]): the edge
-  * list with out-degree attached is pinned ONCE (`persist`, the Pregel
-  * idiom — a lineage-truncating `materialize` barrier fires every
-  * [[LpaCkptEvery]] rounds on long runs, reliable-checkpoint switchable)
-  * and re-read every round; each round is one keyed join (edges ⋈
-  * scores on src), one partial-aggregated sum per dst, and a
-  * label-frame-sized left join for teleport-only nodes — all rows
-  * narrow (three int64s). Rounds are fixed (declared query) so the
-  * DuckDB oracle can replay them as CTEs; [[pageRankConverged]] is the
-  * convergence-driven variant. On a real cluster the edge frame is
-  * pre-partitioned by src so every round's join reuses one shuffle.
+  * Round kernels: every PageRank form runs [[prStep]] over the
+  * [[degreeLinked]] edge frame; the fixed-round forms (and
+  * [[labelPropagation]]) iterate through [[fixedRounds]], the
+  * convergence-driven forms through [[convergedRounds]]. Each round is
+  * one keyed join (edges ⋈ scores on src), one partial-aggregated sum
+  * per dst, and a node-frame-sized left join for teleport-only nodes —
+  * all rows narrow (three int64s). Rounds are fixed in the declared
+  * queries so the DuckDB oracle can replay them as CTEs.
   */
 object Graph {
 
@@ -64,65 +61,141 @@ object Graph {
           "or add self-loops / dangling-mass handling upstream")
     }
 
+  private def requireDamping(dampingPermille: Long): Unit =
+    require(dampingPermille >= 0 && dampingPermille <= 1000,
+      "damping must be a permille in [0, 1000]")
+
+  /** The out-degree frame (src, d) and the edge frame every round
+    * re-reads: (src, dst, d), PRE-HASH-PARTITIONED on the per-round join
+    * key so only the node-sized score frame shuffles each iteration (the
+    * edge shuffle is paid once, not once per round), and persisted once —
+    * lineage stays rooted at the source scan, so re-declared runs
+    * cache-match.
+    */
+  private def degreeLinked(edges: DataFrame): (DataFrame, DataFrame) = {
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    (deg, edges.join(deg, "src").repartition(col("src")).persist())
+  }
+
+  /** The strict forms' graph: the [[degreeLinked]] edges and the
+    * src-derived node frame. The documented precondition is ENFORCED,
+    * not just stated: a node with in-edges but no out-edges would be
+    * silently absent from the node frame — its rows vanish and its
+    * inbound mass is discarded. One anti-join over the pinned frames per
+    * call, never per round, memoized per (session, canonical graph) —
+    * see [[ValidatedSinkFree]].
+    */
+  private def strictGraph(edges: DataFrame, who: String): (DataFrame, DataFrame) = {
+    val (_, linked) = degreeLinked(edges)
+    val nodes = linked.select(col("src").as("node")).distinct().persist()
+    requireSinkFree(linked, nodes, who)
+    (linked, nodes)
+  }
+
+  /** One PageRank round: `left` (node-complete, keyed by `node`)
+    * left-joined to the round's inbound mass Σ score DIV d per dst; the
+    * result is `left`'s columns plus the updated score (teleport +
+    * damping · (mass + share)) DIV 1000 — `share` is the per-node
+    * dangling share, absent for the strict forms.
+    */
+  private def prStep(left: DataFrame, linked: DataFrame, scores: DataFrame,
+                     dampingPermille: Long, share: Option[Long] = None): DataFrame = {
+    val inbound = linked
+      .join(scores.select(col("node").as("src"), col("score")), "src")
+      .groupBy(col("dst")).agg(sum(expr("score DIV d")).as("mass"))
+      .withColumnRenamed("dst", "node")
+    val teleport = (1000L - dampingPermille) * ScoreUnit
+    val mass = share.fold("coalesce(mass, 0L)")(s => s"(coalesce(mass, 0L) + ${s}L)")
+    left.join(inbound, Seq("node"), "left_outer")
+      .select(left.columns.toSeq.map(col) :+
+        expr(s"($teleport + $dampingPermille * $mass) DIV 1000").as("score"): _*)
+  }
+
+  /** Lineage-truncation period of the fixed-round loops: never reached at
+    * the declared round counts, it bounds plan depth on long runs.
+    */
+  val LpaCkptEvery = 8
+
+  /** The fixed-round loop: `iters` applications of `step` from `init`,
+    * the lazy Pregel idiom. Every round frame is `persist()`ed — within a
+    * run that keeps a later reference from recomputing the chain, and
+    * across runs Spark's cache manager matches the canonicalized plan,
+    * so a re-executed declared query reads the cached frames. The loop
+    * has no per-round action of its own, so AQE plans each round's join
+    * from actual sizes. Every [[LpaCkptEvery]] rounds (never after the
+    * last) a `materialize()` barrier truncates lineage: it is the first
+    * point anything is computed, so there the rounds pinned since the
+    * previous barrier are unpersisted and that barrier's leaf is
+    * released — a long run pins at most [[LpaCkptEvery]] + 1 round
+    * frames and one leaf.
+    */
+  private def fixedRounds(init: DataFrame, iters: Int)
+                         (step: DataFrame => DataFrame): DataFrame = {
+    require(iters >= 1, "iters must be >= 1")
+    var cur = init.persist()
+    var pinned = List(cur)
+    var barrier: Option[DataFrame] = None
+    for (i <- 1 to iters) {
+      cur = step(cur).persist()
+      pinned ::= cur
+      if (i % LpaCkptEvery == 0 && i < iters) {
+        cur = cur.materialize()
+        pinned.foreach(_.unpersist(false))
+        pinned = Nil
+        barrier.foreach(_.release())
+        barrier = Some(cur)
+      }
+    }
+    cur
+  }
+
+  /** The convergence-driven loop: each round materializes `step(prev)`
+    * as a new leaf and reads the round's driver scalar through
+    * `stop(next, prev)`; once it has, the previous leaf is released, so
+    * the loop holds at most two round leaves at a time. Returns the last
+    * leaf, the update passes run (≥ 1) and whether `stop` fired before
+    * the `maxIters` cap.
+    *
+    * Rounds are truncated EVERY round, unlike [[fixedRounds]]: a stop
+    * check that joins consecutive rounds references the previous round's
+    * subtree twice, and Catalyst's tree-walking analysis treats the
+    * shared subtree as two copies — analysis cost doubled per round,
+    * measured ×1.8/round on the sf0.1 flow graph (56 s for an 8-round
+    * run under persist chaining; per-round truncation keeps every
+    * round's plan constant-depth at ~0.5 s/round).
+    */
+  private[operators] def convergedRounds(init: DataFrame, maxIters: Int)
+                                        (step: DataFrame => DataFrame)
+                                        (stop: (DataFrame, DataFrame) => Boolean)
+      : (DataFrame, Int, Boolean) = {
+    require(maxIters >= 1, "maxIters must be >= 1")
+    var leaf = init.materialize()
+    var rounds = 0
+    var done = false
+    while (!done && rounds < maxIters) {
+      rounds += 1
+      val next = step(leaf).materialize()
+      done = stop(next, leaf)
+      leaf.release()
+      leaf = next
+    }
+    (leaf, rounds, done)
+  }
+
   /** Fixed-round PageRank over a directed edge list (`src`, `dst`).
     * Every node must have at least one out-edge (feed an undirected graph
     * as both directions — see [[g1PageRank]]); dangling-node mass
-    * redistribution is intentionally out of scope for the declared form,
-    * and the precondition is ENFORCED (loud failure, not missing rows)
-    * unless `validate = false`.
+    * redistribution is [[pageRankDangling]]'s job, and the precondition
+    * is ENFORCED (loud failure, not missing rows).
     * Output: (node, score) for every node, scores in micro-units.
     */
   def pageRank(edges: DataFrame, iters: Int = DefaultIters,
-               dampingPermille: Long = DefaultDampingPermille,
-               validate: Boolean = true): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPermille >= 0 && dampingPermille <= 1000,
-      "damping must be a permille in [0, 1000]")
-    val teleport = (1000L - dampingPermille) * ScoreUnit
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    // one pinned frame serves every round: (src, dst, src outdegree),
-    // PRE-HASH-PARTITIONED on the per-round join key so only the (node-
-    // sized) score frame shuffles each iteration — the edge shuffle is
-    // paid once, not once per round. persist(), not materialize(): the
-    // strict form has NO per-round driver action, so the whole
-    // fixed-round run follows the [[labelPropagation]] lazy Pregel
-    // idiom — persisted frames keep each consumer from recomputing,
-    // lineage stays rooted at the source scan (re-declared runs
-    // cache-match), and the [[LpaCkptEvery]] barrier bounds plan depth
-    // on long runs (see the round-13 measurement note at
-    // [[pageRankDangling]])
-    val linked = edges.join(deg, "src")
-      .repartition(col("src")).persist()
-    val nodes = linked.select(col("src").as("node")).distinct().persist()
-    // Enforce the documented precondition, don't just state it: a node
-    // with in-edges but no out-edges would be silently absent from the
-    // node frame (derived from src only) — its rows vanish and its
-    // inbound mass is discarded. One anti-join over the already-
-    // checkpointed frames, paid once per call, never per round; callers
-    // on a validated pipeline can pass validate = false to skip the pass.
-    // Memoized per (session, canonical graph) — see [[ValidatedSinkFree]].
-    if (validate) requireSinkFree(linked, nodes, "pageRank")
-    var scores = nodes.select(col("node"), lit(ScoreUnit).as("score")).persist()
-    var pinned = List(scores)
-    for (i <- 1 to iters) {
-      val inbound = linked
-        .join(scores.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst")).agg(sum(expr("score DIV d")).as("mass"))
-        .withColumnRenamed("dst", "node")
-      scores = nodes
-        .join(inbound, Seq("node"), "left_outer")
-        .select(col("node"),
-          expr(s"($teleport + $dampingPermille * coalesce(mass, 0L)) DIV 1000")
-            .as("score"))
-        .persist()
-      pinned ::= scores
-      if (i % LpaCkptEvery == 0 && i < iters) {
-        scores = scores.materialize()
-        pinned.foreach(_.unpersist(false))
-        pinned = Nil
-      }
+               dampingPermille: Long = DefaultDampingPermille): DataFrame = {
+    requireDamping(dampingPermille)
+    val (linked, nodes) = strictGraph(edges, "pageRank")
+    fixedRounds(nodes.select(col("node"), lit(ScoreUnit).as("score")), iters) { s =>
+      prStep(nodes, linked, s, dampingPermille)
     }
-    scores
   }
 
   /** G1b: fixed-round PageRank with DANGLING-MASS redistribution — the
@@ -136,47 +209,26 @@ object Graph {
     * (same integer contract as [[pageRank]]; the extra floor leak is
     * ≤ N−1 µ per round, deterministic).
     *
-    * Scale shape: identical to [[pageRank]] (edge⋈degree frame pinned +
-    * pre-partitioned ONCE, per-round shuffle is the node-sized score
-    * frame) plus, per round, ONE 1-row aggregate over the persisted
-    * score frame (the dangling mass) — bounded metadata, never a second
-    * corpus pass. Pinning is `persist()`, not `materialize()`: the dm
-    * scalar is a per-round ACTION, so each round is eagerly evaluated
-    * either way (what the reliable path needs), but persist keeps the
-    * lineage rooted at the source scan so a re-declared run
-    * cache-matches the canonicalized plans — the warm steady state the
-    * memoized l6/bm25 chains report. (Both in-plan alternatives were
-    * measured WORSE on the declared query: folding dm in as a broadcast
-    * 1-row cross join with lazy rounds ran 1.5×, and the same with
-    * localCheckpoint barriers 3.5× — the per-round constant the scalar
-    * costs is smaller than the plan-depth/broadcast overhead it
-    * avoids.) Plan depth for long runs is bounded by a
-    * lineage-truncating barrier every [[LpaCkptEvery]] rounds. Node
-    * frame is src ∪ dst (a sink-only node must hold score), with the
-    * dangling flag precomputed once.
+    * Scale shape: [[pageRank]]'s plus, per round, ONE 1-row aggregate
+    * over the persisted score frame (the dangling mass), read as a
+    * driver scalar and inlined as a literal — bounded metadata, never a
+    * second corpus pass. The scalar is deterministic, so re-declared
+    * plans still canonically match the cache. (Both in-plan alternatives
+    * were measured WORSE on the declared query: folding dm in as a
+    * broadcast 1-row cross join with lazy rounds ran 1.5×, and the same
+    * with localCheckpoint barriers 3.5×.) Node frame is src ∪ dst (a
+    * sink-only node must hold score), with the dangling flag precomputed
+    * once.
     */
   def pageRankDangling(edges: DataFrame, iters: Int = DefaultIters,
                        dampingPermille: Long = DefaultDampingPermille): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPermille >= 0 && dampingPermille <= 1000,
-      "damping must be a permille in [0, 1000]")
-    val teleport = (1000L - dampingPermille) * ScoreUnit
+    requireDamping(dampingPermille)
     // the edge list feeds FOUR consumers here (degrees, the linked join,
-    // and the node frame's union + dangling flag) — unlike the strict
-    // form, whose declared caller pre-materializes, this one pins the
-    // input itself or an expensive edge build (a fact-table join +
-    // distinct) re-executes once per consumer. persist(), not
-    // materialize(): with the dm scalar folded in-plan this loop has no
-    // per-round driver action, so the whole chain follows the
-    // [[labelPropagation]] Pregel idiom — cached frames keep each
-    // round's two consumers from recomputing, the lineage stays rooted
-    // at the source scan (so a re-declared run cache-matches the
-    // canonicalized plans), and plan depth for long runs is bounded by
-    // the [[LpaCkptEvery]] materialize barrier below
+    // and the node frame's union + dangling flag) — pin it, or an
+    // expensive edge build (a fact-table join + distinct) re-executes
+    // once per consumer
     val e = edges.persist()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val linked = e.join(deg, "src")
-      .repartition(col("src")).persist()
+    val (deg, linked) = degreeLinked(e)
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
@@ -184,44 +236,15 @@ object Graph {
         Seq("node"), "left_outer")
       .select(col("node"), col("__out").isNull.as("dangling"))
       .persist()
-    // one driver scalar (the node count) — the DIV-N share denominator;
-    // bounded metadata, computed ONCE off the checkpointed node frame
-    // (unlike the per-round mass, N is loop-invariant)
+    // the DIV-N share denominator: loop-invariant, computed ONCE
     val n = nodes.count()
     require(n > 0, "pageRankDangling: empty graph")
-    var scores = nodes.select(col("node"), col("dangling"),
-      lit(ScoreUnit).as("score"))
-      .persist()
-    var pinned = List(scores)
-    for (i <- 1 to iters) {
-      // this round's dangling mass: a 1-ROW DRIVER SCALAR off the
-      // persisted node-sized score frame (bounded metadata, the
-      // node-count discipline) — inlined as a literal so the update
-      // plan carries no per-round broadcast exchange + join for one
-      // row. The scalar is DETERMINISTIC (integer arithmetic), so the
-      // inlined literal is identical on every run and re-declared
-      // plans still canonically match the cache.
-      val dm = scores.filter(col("dangling"))
+    fixedRounds(nodes.select(col("node"), col("dangling"), lit(ScoreUnit).as("score")),
+      iters) { s =>
+      val dm = s.filter(col("dangling"))
         .agg(coalesce(sum(col("score")), lit(0L))).first().getLong(0)
-      val share = dm / n // floored per-node share, exact BIGINT
-      val inbound = linked
-        .join(scores.select(col("node").as("src"), col("score")), "src")
-        .groupBy(col("dst")).agg(sum(expr("score DIV d")).as("mass"))
-        .withColumnRenamed("dst", "node")
-      scores = nodes
-        .join(inbound, Seq("node"), "left_outer")
-        .select(col("node"), col("dangling"),
-          expr(s"($teleport + $dampingPermille * (coalesce(mass, 0L) + ${share}L)) DIV 1000")
-            .as("score"))
-        .persist()
-      pinned ::= scores
-      if (i % LpaCkptEvery == 0 && i < iters) {
-        scores = scores.materialize()
-        pinned.foreach(_.unpersist(false))
-        pinned = Nil
-      }
-    }
-    scores.select(col("node"), col("score"))
+      prStep(nodes, linked, s, dampingPermille, Some(dm / n))
+    }.select(col("node"), col("score"))
   }
 
   /** G2: triangle count + global clustering coefficient, degree-oriented —
@@ -313,51 +336,52 @@ object Graph {
       .distinct()
     triangleStats(und)
   }
-
-  /** G1 declared query: PageRank over the supplier–customer shipping graph
-    * (an edge per distinct supplier→customer lineitem flow, fed in both
-    * directions so the graph is undirected and dangling-free). Node ids
-    * disambiguate the two keyspaces arithmetically: supplier s → 2s,
-    * customer c → 2c+1. Top-20 by score.
+  /** The supplier–customer shipping graph: one row per distinct
+    * supplier→customer lineitem flow, with the two keyspaces
+    * disambiguated arithmetically — supplier s → 2s, customer c → 2c+1 —
+    * in columns named (`from`, `to`).
     */
-  def g1PageRank(spark: SparkSession, dir: String): DataFrame = {
+  private def flows(spark: SparkSession, dir: String,
+                    from: String = "s", to: String = "c"): DataFrame = {
     val t = Tables(spark, dir)
+    t.lineitem
+      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
+      .select((col("l_suppkey") * 2).as(from), (col("o_custkey") * 2 + 1).as(to))
+      .distinct()
+  }
+
+  /** [[flows]] fed in both directions as (`src`, `dst`): the undirected,
+    * dangling-free form of the graph.
+    */
+  private def bothWays(flows: DataFrame): DataFrame =
+    flows.select(col("s").as("src"), col("c").as("dst"))
+      .unionByName(flows.select(col("c").as("src"), col("s").as("dst")))
+
+  /** G1 declared query: PageRank over the undirected supplier–customer
+    * shipping graph ([[flows]] in both directions). Top-20 by score.
+    */
+  def g1PageRank(spark: SparkSession, dir: String): DataFrame =
     // pin the flow list BEFORE the flip-union: the two union branches
     // are separate lineages, so the lineitem⋈orders + distinct build
-    // would execute once per branch (and again under pageRank's degree
+    // would execute once per branch (and again under the degree
     // aggregate). persist(), not materialize(), so the whole declared
     // chain stays rooted at the parquet scan and re-declared runs
-    // cache-match (the pageRank-internals discipline)
-    val flows = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select((col("l_suppkey") * 2).as("s"), (col("o_custkey") * 2 + 1).as("c"))
-      .distinct()
-      .persist()
-    val edges = flows.select(col("s").as("src"), col("c").as("dst"))
-      .unionByName(flows.select(col("c").as("src"), col("s").as("dst")))
-    pageRank(edges)
+    // cache-match
+    pageRank(bothWays(flows(spark, dir).persist()))
       .orderBy(col("score").desc, col("node"))
       .limit(20)
-  }
 
   /** G1b declared query: dangling-aware PageRank over the DIRECTED
     * supplier→customer shipping-flow graph — the natural dangling case:
     * every customer node is a pure sink (in-edges only), so without
     * redistribution 100·(|customers|/|nodes|)% of the mass would vanish
-    * per round. Same arithmetic node-id scheme as [[g1PageRank]]
-    * (supplier s → 2s, customer c → 2c+1). Top-20 by score — the most
-    * flow-central parties when mass is conserved.
+    * per round. Top-20 by score — the most flow-central parties when
+    * mass is conserved.
     */
-  def g1PageRankDangling(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val edges = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select((col("l_suppkey") * 2).as("src"), (col("o_custkey") * 2 + 1).as("dst"))
-      .distinct()
-    pageRankDangling(edges)
+  def g1PageRankDangling(spark: SparkSession, dir: String): DataFrame =
+    pageRankDangling(flows(spark, dir, "src", "dst"))
       .orderBy(col("score").desc, col("node"))
       .limit(20)
-  }
 
   /** Default delta threshold (micro-units) and round cap for
     * [[pageRankConverged]]: stop when no node's score moved more than
@@ -379,88 +403,33 @@ object Graph {
     * GraphSpec pins converged == fixed-round on the fixture graph and
     * the early stop on an exactly-converging hand graph.
     *
-    * Per round this adds ONE 1-row aggregate (max |Δscore| over the
-    * node-sized join of consecutive score frames) — and that join is
-    * why this loop MUST truncate lineage EVERY round
-    * (`materialize()`), unlike the persist-chained fixed-round forms:
-    * the delta plan references the previous round's subtree TWICE
-    * (once under the new round's update, once as the join's other
-    * side), and Catalyst's tree-walking analysis treats the shared
-    * subtree as two copies — so analysis cost DOUBLES per round,
-    * measured ×1.8/round on the sf0.1 flow graph (round 1: 2.2 s,
-    * round 8: 19 s, 56 s for an 8-round run under the persist
-    * discipline; per-round truncation makes every round's plan
-    * constant-depth and the same run costs ~0.5 s/round). The
-    * fixed-round forms have no per-round two-sided join, so their
-    * persist chains stay linear and keep the cross-run cache-matching
-    * benefit; here correctness of the BUILD frames' caching is
-    * preserved (linked/nodes persist as before) while round frames
-    * are localCheckpoint leaves (reliable-checkpoint switchable).
+    * Per round this adds ONE 1-row aggregate, max |Δscore|, read by
+    * [[convergedRounds]]. The update joins the PREVIOUS score frame
+    * (node-complete by construction), which lets one join both drive
+    * the update AND carry `prev` into the materialized round frame: the
+    * delta then aggregates the already-checkpointed rows instead of
+    * paying a second node⋈node join job per round (measured 6.0 → 4.7 s
+    * on the declared 8-round query at sf0.1).
     *
     * Output: (node, score, rounds) — rounds = update passes executed
     * (the stop check compares round t to t−1, so rounds ≥ 1).
-    *
-    * `retainCache = true` (default) keeps round frames' blocks pinned
-    * after return; long-lived sessions iterating over MANY distinct
-    * graphs should pass `false` — superseded round frames are then
-    * unpersisted as soon as the round-boundary action has consumed
-    * them, so the loop pins at most two round frames at a time.
     */
   def pageRankConverged(edges: DataFrame, epsMicro: Long = DefaultPrEpsMicro,
                         maxIters: Int = DefaultConvergedMaxIters,
-                        dampingPermille: Long = DefaultDampingPermille,
-                        validate: Boolean = true,
-                        retainCache: Boolean = true): DataFrame = {
-    require(maxIters >= 1, "maxIters must be >= 1")
+                        dampingPermille: Long = DefaultDampingPermille): DataFrame = {
     require(epsMicro >= 0, "epsMicro must be >= 0")
-    require(dampingPermille >= 0 && dampingPermille <= 1000,
-      "damping must be a permille in [0, 1000]")
-    val teleport = (1000L - dampingPermille) * ScoreUnit
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val linked = edges.join(deg, "src")
-      .repartition(col("src")).persist()
-    val nodes = linked.select(col("src").as("node")).distinct().persist()
-    if (validate) requireSinkFree(linked, nodes, "pageRankConverged")
-    // round frames are per-round TRUNCATED leaves (see the Scaladoc's
-    // measured exponential-analysis rationale), so the delta join below
-    // always joins two constant-depth plans
-    var scores = nodes.select(col("node"), lit(ScoreUnit).as("score")).materialize()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxIters) {
-      rounds += 1
-      // the update joins the PREVIOUS score frame (node-complete by
-      // construction — initialized from nodes, preserved by every
-      // round's left join), which lets one join both drive the update
-      // AND carry `prev` into the materialized round frame: the delta
-      // scalar then aggregates the already-checkpointed rows instead of
-      // paying a second node⋈node join job per round (one fewer
-      // shuffle-join action per round, measured 6.0 → 4.7 s on the
-      // declared 8-round query at sf0.1; same integer scores, oracle
-      // replay unchanged)
-      val inbound = linked
-        .join(scores.select(col("node").as("src"), col("score")), "src")
-        .groupBy(col("dst")).agg(sum(expr("score DIV d")).as("mass"))
-        .withColumnRenamed("dst", "node")
-      val next = scores.select(col("node"), col("score").as("prev"))
-        .join(inbound, Seq("node"), "left_outer")
-        .select(col("node"),
-          expr(s"($teleport + $dampingPermille * coalesce(mass, 0L)) DIV 1000")
-            .as("score"),
-          col("prev"))
-        .materialize()
-      // the round-boundary driver scalar: max |Δ| over the checkpointed
-      // round frame (1-row aggregate, bounded metadata, no join)
-      val delta = next
-        .agg(coalesce(max(abs(col("score") - col("prev"))), lit(0L)))
-        .first().getLong(0)
-      // the delta action consumed the previous frame — release its
-      // blocks when the caller opted out of retention (see Scaladoc)
-      if (!retainCache) scores.unpersist(false)
-      scores = next.select(col("node"), col("score"))
-      if (delta <= epsMicro) converged = true
+    requireDamping(dampingPermille)
+    val (linked, nodes) = strictGraph(edges, "pageRankConverged")
+    val (leaf, rounds, _) = convergedRounds(
+      nodes.select(col("node"), lit(ScoreUnit).as("score")), maxIters) { prev =>
+      val s = prev.select(col("node"), col("score"))
+      prStep(s.select(col("node"), col("score").as("prev")), linked, s, dampingPermille)
+        .select(col("node"), col("score"), col("prev"))
+    } { (next, _) =>
+      next.agg(coalesce(max(abs(col("score") - col("prev"))), lit(0L)))
+        .first().getLong(0) <= epsMicro
     }
-    scores.withColumn("rounds", lit(rounds))
+    leaf.select(col("node"), col("score")).withColumn("rounds", lit(rounds))
   }
 
   /** Declared-query convergence parameters for [[g1PageRankConverged]]:
@@ -484,10 +453,9 @@ object Graph {
     * ever-deeper persisted lineage (~3 s/action by round 20; per-round
     * localCheckpoint truncation only improved it to ~16 s by trading
     * plan depth for barrier copies), while 8 rounds stay in the
-    * dangling query's measured cost class AND under the
-    * [[LpaCkptEvery]] barrier, so warm re-runs cache-match the whole
-    * chain. Long runs at tighter ε remain [[pageRankConverged]]'s
-    * contract; this pair prices the DECLARED demonstration.
+    * dangling query's measured cost class. Long runs at tighter ε
+    * remain [[pageRankConverged]]'s contract; this pair prices the
+    * DECLARED demonstration.
     */
   val DeclaredPrEpsMicro = 4500000L
   val DeclaredPrMaxIters = 12
@@ -497,63 +465,13 @@ object Graph {
     * Top-20 by score, with the converged round count on every row —
     * the long-run stop semantics under the driver's hash gate.
     */
-  def g1PageRankConverged(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val flows = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select((col("l_suppkey") * 2).as("s"), (col("o_custkey") * 2 + 1).as("c"))
-      .distinct()
-      .persist()
-    val edges = flows.select(col("s").as("src"), col("c").as("dst"))
-      .unionByName(flows.select(col("c").as("src"), col("s").as("dst")))
-    pageRankConverged(edges, epsMicro = DeclaredPrEpsMicro,
-      maxIters = DeclaredPrMaxIters)
+  def g1PageRankConverged(spark: SparkSession, dir: String): DataFrame =
+    pageRankConverged(bothWays(flows(spark, dir).persist()),
+      epsMicro = DeclaredPrEpsMicro, maxIters = DeclaredPrMaxIters)
       .orderBy(col("score").desc, col("node"))
       .limit(20)
-  }
 
   val DefaultLpaIters = 4
-
-  /** G3: synchronous label propagation (Raghavan et al. 2007) — community
-    * detection by iterated neighborhood majority vote. Every node starts
-    * labeled with its own id; each round, every node adopts the label
-    * most frequent among its NEIGHBORS (ties broken by smallest label, so
-    * every round is a deterministic function of the previous one — no RNG,
-    * no visit order). Fixed rounds (declared query: [[DefaultLpaIters]])
-    * keep the op oracle-replayable round-for-round and sidestep the
-    * oscillation non-termination of convergence-driven synchronous LPA on
-    * bipartite structures.
-    *
-    * Input: symmetric edge list (`src`, `dst`) — feed both directions for
-    * an undirected graph, as with [[pageRank]]; every node must appear as
-    * a dst (guaranteed by symmetry when it has any edge at all).
-    *
-    * Scale shape, per round: one keyed join (edges ⋈ labels on src), then
-    * TWO hash aggregates — (dst, label) vote counts (map-side partial
-    * combine absorbs locally hot labels) and per-dst argmax via
-    * `min_by(label, struct(−cnt, label))`, which is partial-combinable
-    * where a rank window would sort every vote group. No per-node
-    * neighbor lists ever materialize.
-    *
-    * Unlike [[pageRank]] — whose dangling variant needs a driver scalar
-    * per round, forcing per-round evaluation and therefore per-round
-    * lineage pinning — LPA has NO per-round action, so the whole
-    * fixed-round run is declared LAZILY as ONE Spark job: AQE picks
-    * broadcast-vs-shuffle for each round's label join from the ACTUAL
-    * label-frame size, and no checkpoint barrier interrupts the
-    * pipeline (measured: the eager per-round `materialize()` form ran
-    * 5× slower at fixture scale for zero scale benefit). Each round's
-    * label frame is `persist()`ed — the Pregel/GraphX per-iteration
-    * discipline (MEMORY_AND_DISK at scale, LRU-evicted): within a run
-    * it keeps a later reference from recomputing the chain, and across
-    * runs Spark's cache manager matches the canonicalized plan, so a
-    * re-executed declared query reads the cached frames — the same
-    * session-warm steady state the memoized l6/bm25 chains report.
-    * Plan depth stays bounded for long convergence runs by a
-    * lineage-truncating checkpoint every [[LpaCkptEvery]] rounds (never
-    * taken at the declared [[DefaultLpaIters]]).
-    */
-  val LpaCkptEvery = 8
 
   /** The LPA symmetric-input guard ([[labelPropagation]]'s analogue of
     * [[pageRank]]'s sink-only check, mirrored direction): each round's
@@ -573,37 +491,51 @@ object Graph {
         "after round 1; feed both directions for an undirected graph")
   }
 
+  /** Round 0 of label propagation: every node labeled with its own id. */
+  private def ownLabels(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label"))
+
+  /** One LPA round: (dst, label) vote counts — map-side partial combine
+    * absorbs locally hot labels — then the per-dst argmax via
+    * `min_by(label, struct(−cnt, label))`, which is partial-combinable
+    * where a rank window would sort every vote group, and breaks ties on
+    * the smallest label. No per-node neighbor lists ever materialize.
+    */
+  private def lpaStep(edges: DataFrame, labels: DataFrame): DataFrame =
+    edges
+      .join(labels.select(col("node").as("src"), col("label")), "src")
+      .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
+      .groupBy(col("dst"))
+      .agg(min_by(col("label"), struct((-col("cnt")).as("nc"), col("label")))
+        .as("label"))
+      .withColumnRenamed("dst", "node")
+
+  /** G3: synchronous label propagation (Raghavan et al. 2007) — community
+    * detection by iterated neighborhood majority vote. Every node starts
+    * labeled with its own id; each round ([[lpaStep]]), every node adopts
+    * the label most frequent among its NEIGHBORS (ties broken by smallest
+    * label, so every round is a deterministic function of the previous
+    * one — no RNG, no visit order). Fixed rounds (declared query:
+    * [[DefaultLpaIters]]) keep the op oracle-replayable round-for-round
+    * and sidestep the oscillation non-termination of convergence-driven
+    * synchronous LPA on bipartite structures.
+    *
+    * Input: symmetric edge list (`src`, `dst`) — feed both directions for
+    * an undirected graph, as with [[pageRank]]. The guard
+    * ([[requireSymmetricLpaInput]]) is skippable with `validate = false`
+    * where the caller constructs symmetry, as [[g3LabelProp]] does.
+    *
+    * LPA has NO per-round action, so the whole fixed-round run
+    * ([[fixedRounds]]) is declared LAZILY as ONE Spark job (measured: the
+    * eager per-round `materialize()` form ran 5× slower at fixture scale
+    * for zero scale benefit).
+    */
   def labelPropagation(edges: DataFrame, iters: Int = DefaultLpaIters,
                        validate: Boolean = true): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
     if (validate) requireSymmetricLpaInput(edges, "labelPropagation")
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .persist()
-    // rounds persisted since the last checkpoint barrier: the barrier's
-    // materialize() is the first point anything is computed, so that is
-    // where superseded rounds can be released (the Pregel unpersist
-    // discipline) — a 100-round run pins at most LpaCkptEvery frames,
-    // while a short declared run keeps its frames cached for the
-    // cross-run warm hits
-    var pinned = List(labels)
-    for (i <- 1 to iters) {
-      val votes = edges
-        .join(labels.select(col("node").as("src"), col("label")), "src")
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
-      labels = votes.groupBy(col("dst"))
-        .agg(min_by(col("label"), struct((-col("cnt")).as("nc"), col("label")))
-          .as("label"))
-        .withColumnRenamed("dst", "node")
-        .persist()
-      pinned ::= labels
-      if (i % LpaCkptEvery == 0 && i < iters) {
-        labels = labels.materialize()
-        pinned.foreach(_.unpersist(false))
-        pinned = Nil
-      }
-    }
-    labels.select(col("node"), col("label").as("community"))
+    fixedRounds(ownLabels(edges), iters)(lpaStep(edges, _))
+      .select(col("node"), col("label").as("community"))
   }
 
   /** G3b: label propagation iterated to QUIESCENCE — stop when a round
@@ -614,79 +546,38 @@ object Graph {
     * quiesces — the supplier–customer flow graph is exactly such a
     * graph), so `maxIters` is a hard cap, not a formality; a run that
     * hits the cap returns the cap-round labels with `converged =
-    * false`.
-    *
-    * The no-change check is ONE 1-row aggregate per round over the
-    * node-sized join of consecutive label frames — the same
-    * two-sided consecutive-round join as [[pageRankConverged]]'s
-    * delta, so the same measured exponential-analysis hazard applies
-    * (the shared previous-round subtree is tree-walked twice per
-    * round): round frames are per-round `materialize()` leaves,
-    * keeping every round's plan constant-depth.
+    * false`. The no-change check is ONE 1-row aggregate per round over
+    * the node-sized join of consecutive label frames, read by
+    * [[convergedRounds]].
     *
     * Output: (node, community, rounds, converged) — rounds = update
-    * passes executed (≥ 1). Symmetric input is ENFORCED (same guard
-    * rationale as [[pageRank]]'s, mirrored direction — see
-    * [[requireSymmetricLpaInput]]) unless `validate = false`;
-    * `retainCache` follows the [[pageRankConverged]] contract.
+    * passes executed (≥ 1). Symmetric input is ENFORCED, as in
+    * [[labelPropagation]].
     */
   def labelPropagationConverged(edges: DataFrame,
-                                maxIters: Int = DefaultConvergedMaxIters,
-                                validate: Boolean = true,
-                                retainCache: Boolean = true): DataFrame = {
-    require(maxIters >= 1, "maxIters must be >= 1")
-    if (validate) requireSymmetricLpaInput(edges, "labelPropagationConverged")
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .materialize()
-    var rounds = 0
-    var quiet = false
-    while (!quiet && rounds < maxIters) {
-      rounds += 1
-      val votes = edges
-        .join(labels.select(col("node").as("src"), col("label")), "src")
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
-      val next = votes.groupBy(col("dst"))
-        .agg(min_by(col("label"), struct((-col("cnt")).as("nc"), col("label")))
-          .as("label"))
-        .withColumnRenamed("dst", "node")
-        .materialize()
-      val changed = next.join(labels.select(col("node"),
-          col("label").as("prev")), "node")
+                                maxIters: Int = DefaultConvergedMaxIters): DataFrame = {
+    requireSymmetricLpaInput(edges, "labelPropagationConverged")
+    val (leaf, rounds, quiet) = convergedRounds(ownLabels(edges), maxIters)(
+      lpaStep(edges, _)) { (next, prev) =>
+      next.join(prev.select(col("node"), col("label").as("prev")), "node")
         .agg(coalesce(sum(when(col("label") =!= col("prev"), 1L)
           .otherwise(0L)), lit(0L)))
-        .first().getLong(0)
-      // the changed-count action consumed the previous frame — release
-      // its blocks when the caller opted out of retention
-      if (!retainCache) labels.unpersist(false)
-      labels = next
-      if (changed == 0L) quiet = true
+        .first().getLong(0) == 0L
     }
-    labels.select(col("node"), col("label").as("community"),
+    leaf.select(col("node"), col("label").as("community"),
       lit(rounds).as("rounds"), lit(quiet).as("converged"))
   }
 
   /** G3 declared query: communities of the undirected supplier–customer
-    * shipping graph (same node-id scheme and symmetrized flow edges as
-    * [[g1PageRank]]), one row per node after [[DefaultLpaIters]] rounds.
+    * shipping graph ([[flows]] in both directions), one row per node
+    * after [[DefaultLpaIters]] rounds.
     */
-  def g3LabelProp(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    // no materialize: the run is ONE action (labelPropagation is lazy),
-    // so the flow build's distinct exchange is shared by every consumer
-    // via ReuseExchange — a checkpoint here would only add a barrier
-    val flows = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select((col("l_suppkey") * 2).as("s"), (col("o_custkey") * 2 + 1).as("c"))
-      .distinct()
-    val edges = flows.select(col("s").as("src"), col("c").as("dst"))
-      .unionByName(flows.select(col("c").as("src"), col("s").as("dst")))
-    // validate = false: the flip-union CONSTRUCTS symmetry — every src
-    // row has its mirrored dst row by definition, so the source-only
-    // guard (two distinct + anti-join jobs per run, ~0.5 s warm at
-    // sf0.1 — it pushed the twin ratio past 2× when run per call) can
-    // be skipped on this provably-symmetric input; library callers on
-    // arbitrary edge lists keep the default-on guard
-    labelPropagation(edges, validate = false).orderBy(col("node"))
-  }
+  def g3LabelProp(spark: SparkSession, dir: String): DataFrame =
+    // no pin on the flows: the run is ONE action (labelPropagation is
+    // lazy), so the flow build's distinct exchange is shared by every
+    // consumer via ReuseExchange. validate = false: the flip-union
+    // CONSTRUCTS symmetry, so the source-only guard (two distinct +
+    // anti-join jobs per run, ~0.5 s warm at sf0.1) would prove nothing
+    labelPropagation(bothWays(flows(spark, dir)), validate = false)
+      .orderBy(col("node"))
 }

@@ -539,10 +539,9 @@ object Relational {
     * three SFs against expr("percentile"); RelationalSpec pins it).
     *
     * Null discipline: values are filtered before ranking and counted
-    * with count(v), matching percentile's ignore-nulls. Groups with
-    * n = 0 would drop out rather than yield NULL — impossible for the
-    * fixture measures, and the pinned object-agg forms keep the
-    * original semantics on record.
+    * with count(v), matching percentile's ignore-nulls. A group with
+    * n = 0 has no row here: callers left-join this frame to keep it with
+    * NULL percentiles, as the object-agg forms do.
     *
     * Returns (g, __pct0, __pct1, ...) one row per group with ≥1 value.
     */
@@ -595,7 +594,7 @@ object Relational {
     val stats = base.groupBy(col("l_returnflag"))
       .agg(round(stddev_samp(col("l_quantity")), 4).as("sd_qty"),
         round(corr(col("l_quantity"), col("l_extendedprice")), 4).as("corr_qty_price"))
-    stats.join(broadcast(med), Seq("l_returnflag"))
+    stats.join(broadcast(med), Seq("l_returnflag"), "left")
       .select(col("l_returnflag"), round(col("__pct0"), 4).as("median_price"),
         col("sd_qty"), col("corr_qty_price"))
       .orderBy(col("l_returnflag"))
@@ -680,7 +679,7 @@ object Relational {
       .groupBy(col("l_returnflag"))
       .agg(percentile_approx(col("l_extendedprice"),
         array(lit(0.5), lit(0.95)), lit(10000)).as("__ap"))
-      .join(broadcast(ex), Seq("l_returnflag"))
+      .join(broadcast(ex), Seq("l_returnflag"), "left")
       .select(col("l_returnflag"),
         round(col("__pct0"), 4).as("median_price"),
         round(col("__pct1"), 4).as("p95_price"),

@@ -146,6 +146,14 @@ class GraphSpec extends SparkSuite {
       Graph.pageRankConverged(fixEdges, epsMicro = 0L, maxIters = 3)
         .select(col("node"), col("score")),
       Graph.pageRank(fixEdges, iters = 3))
+    // one round past the LpaCkptEvery barrier: the fixed-round form
+    // truncates lineage at round 8, the converged form every round, and
+    // the fixture graph is still moving, so the converged run uses them all
+    val long = Graph.LpaCkptEvery + 1
+    val convLong = Graph.pageRankConverged(fixEdges, epsMicro = 0L, maxIters = long)
+    assert(convLong.collect().forall(_.getAs[Int]("rounds") == long))
+    assertSameRows(convLong.select(col("node"), col("score")),
+      Graph.pageRank(fixEdges, iters = long))
   }
 
   test("G1c declared query exercises the convergence exit, not the cap") {
@@ -160,7 +168,7 @@ class GraphSpec extends SparkSuite {
       s"declared convergence landed at $rounds of cap ${Graph.DeclaredPrMaxIters}")
   }
 
-  test("LPA symmetric-input guard: source-only nodes fail loudly; retainCache=false is value-identical") {
+  test("LPA symmetric-input guard: source-only nodes fail loudly") {
     // directed misuse: node 9 has out-edges only — before the guard it
     // silently vanished from the label frame (ADVICE r13); now both LPA
     // forms must refuse it
@@ -173,15 +181,49 @@ class GraphSpec extends SparkSuite {
       Graph.labelPropagationConverged(directed)
     }
     assert(e2.getMessage.contains("source-only"))
-    // the unpersist hook must not change any value, only cache lifetime
-    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L), (4L, 6L), (5L, 6L))
-    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    assertSameRows(
-      Graph.labelPropagationConverged(edges, retainCache = false),
-      Graph.labelPropagationConverged(edges))
-    assertSameRows(
-      Graph.pageRankConverged(edges, retainCache = false),
-      Graph.pageRankConverged(edges))
+  }
+
+  test("converged loops release superseded rounds: the pins a call leaves do not grow with rounds") {
+    val sc = spark.sparkContext
+    // Spark tracks persisted RDDs weakly: once GC finds a leaked round
+    // leaf unreachable, its ContextCleaner frees it, which would hide the
+    // leak at random. Holding every persisted RDD seen at a job start
+    // keeps a leaked leaf counted until the test ends.
+    val held = new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
+    val holder = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.foreach { case (id, rdd) => held.put(id, rdd) }
+    }
+    sc.addSparkListener(holder)
+    // the persistent RDDs a call leaves behind: ids present after it that
+    // were not before. The frame is returned so that it stays reachable
+    def leftBehind(run: => org.apache.spark.sql.DataFrame)
+        : (Int, org.apache.spark.sql.DataFrame) = {
+      val before = sc.getPersistentRDDs.keySet
+      val df = run
+      df.collect()
+      ((sc.getPersistentRDDs.keySet -- before).size, df)
+    }
+    // inputs that use every round, offset by c so no call reuses another
+    // call's cached build frames: the star's floored scores never reach
+    // an exact fixpoint within 9 rounds, and the single-edge oscillator
+    // never quiesces
+    def star(c: Long) = {
+      val und = Seq((c, c + 1), (c, c + 2), (c, c + 3))
+      (und ++ und.map(_.swap)).toDF("src", "dst")
+    }
+    def osc(c: Long) = Seq((c, c + 1), (c + 1, c)).toDF("src", "dst")
+    val (pr3, pr9, lp3, lp9) = try {
+      val (pr3, prFrame3) = leftBehind(Graph.pageRankConverged(star(100L), 0L, maxIters = 3))
+      val (pr9, prFrame9) = leftBehind(Graph.pageRankConverged(star(200L), 0L, maxIters = 9))
+      val (lp3, lpFrame3) = leftBehind(Graph.labelPropagationConverged(osc(300L), maxIters = 3))
+      val (lp9, lpFrame9) = leftBehind(Graph.labelPropagationConverged(osc(400L), maxIters = 9))
+      for ((df, rounds) <- Seq(prFrame3 -> 3, prFrame9 -> 9, lpFrame3 -> 3, lpFrame9 -> 9))
+        assert(df.collect().forall(_.getAs[Int]("rounds") == rounds))
+      (pr3, pr9, lp3, lp9)
+    } finally sc.removeSparkListener(holder)
+    assert(pr3 == pr9, s"pageRankConverged left $pr3 pins at 3 rounds, $pr9 at 9")
+    assert(lp3 == lp9, s"labelPropagationConverged left $lp3 pins at 3 rounds, $lp9 at 9")
   }
 
   test("G1b dangling pagerank: hand-computed star; == integer reference over 3 rounds") {
@@ -210,6 +252,11 @@ class GraphSpec extends SparkSuite {
     val r3 = Graph.pageRankDangling(edges, iters = 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r3 == ref(3))
+    // one round past the LpaCkptEvery lineage barrier
+    val long = Graph.LpaCkptEvery + 1
+    val rLong = Graph.pageRankDangling(edges, iters = long).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(rLong == ref(long))
     // the STRICT form must reject the same graph loudly, not drop mass
     val err = intercept[IllegalArgumentException] { Graph.pageRank(edges).collect() }
     assert(err.getMessage.contains("sink-only"))

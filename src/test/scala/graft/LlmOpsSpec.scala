@@ -749,7 +749,7 @@ class LlmOpsSpec extends SparkSuite {
 
   test("L4 BM25: rare beats common, longer docs dampened, saturates with tf") {
     import org.apache.spark.sql.SaveMode
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25").toString
+    val dir = tempDir("graft_bm25").toString
     Seq(
       (1L, "rare topic a"),            // tf(topic)=1, dl=3
       (2L, "topic b c d e f"),         // tf(topic)=1, dl=6 (longer)
@@ -766,11 +766,13 @@ class LlmOpsSpec extends SparkSuite {
     // tf saturation: tripling tf (same dl) gains, but less than 3×
     assert(out((4L, "sat")) > out((3L, "sat")))
     assert(out((4L, "sat")) < 3 * out((3L, "sat")))
+    // the bm25 memo keeps a frame over the dir, which this test deletes
+    SessionCache.clearAll()
   }
 
   test("L4 BM25 search: doc holding both query terms outranks single-term docs") {
     import org.apache.spark.sql.SaveMode
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25s").toString
+    val dir = tempDir("graft_bm25s").toString
     Seq(
       (1L, "quick fox jumps"),        // both query terms, doc 1 must win
       (2L, "quick brown bear"),       // one term
@@ -791,6 +793,7 @@ class LlmOpsSpec extends SparkSuite {
     }
     // case-exact contract: capitalized query term matches nothing extra
     assert(TextOps.bm25Search(spark, dir, "Quick", 5).count() == 0)
+    SessionCache.clearAll()
   }
 
   test("L4 fingerprint: stable 32-hex, shifts only on edit") {

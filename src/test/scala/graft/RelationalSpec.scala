@@ -161,6 +161,26 @@ class RelationalSpec extends SparkSuite {
       s"fact join must stream lineitem against the broadcast orders build:\n$plan")
   }
 
+  test("a6 rank-percentile forms keep a group whose measure is all NULL") {
+    // the rank form has no row for a group with no value to rank; the
+    // object-agg witnesses keep such a group with a NULL percentile
+    val dir = tempDir("graft-a6null").toString
+    val li = tables.lineitem
+      .select(col("l_returnflag"), col("l_extendedprice"), col("l_quantity"))
+    li.limit(40)
+      .unionByName(li.limit(3).select(lit("Z").as("l_returnflag"),
+        lit(null).cast(li.schema("l_extendedprice").dataType).as("l_extendedprice"),
+        col("l_quantity")))
+      .write.parquet(s"$dir/lineitem.parquet")
+    val stats = Relational.a6Stats(spark, dir)
+    assertSameRows(stats, Relational.a6StatsObjectAggForm(spark, dir))
+    def groups(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.getAs[String]("l_returnflag")).toSet
+    assert(groups(stats).contains("Z"))
+    assert(groups(Relational.a6StatsApproxChecked(spark, dir)) ==
+      groups(Relational.a6StatsApproxObjectAggForm(spark, dir)))
+  }
+
   test("a6 approx percentile within tolerance of exact") {
     val approx = Relational.a6ApproxPercentile(spark, sf).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
